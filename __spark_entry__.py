@@ -2709,7 +2709,8 @@ def q34_rules_catalog_sql(spark, sf_dir):
     wayproblems.cpp:1441-1546, the same code path r01/r02 run — over a
     deterministic synthesized way corpus (rules/synth.py: every tag a
     closed-form residue of way_id), vs DuckDB re-deriving every site from
-    the catalogue's third render target (rules/sqlgen.py). Covers all live
+    the DuckDB dialect of the catalogue's SQL renderer (rules/sqlgen.py),
+    whose Spark dialect is the engine's own rule expression. Covers all live
     sites at sf0.01 (coverage test in tests/test_catalog_oracle.py),
     including printf '(null)' args (Q2), 254-char truncation (Q8), the
     trailing-space key (Q5), and the turn:lanes fold emitters."""

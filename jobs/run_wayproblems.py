@@ -129,8 +129,11 @@ def main():
         os.path.join(args.out, "problems"),
     )
 
-    # tiles + stdout replay come from what was just WRITTEN — zero recompute
-    feats = spark.read.parquet(os.path.join(args.out, "problems", "bucket=*"))
+    # tiles + stdout replay come from what was just WRITTEN — zero recompute.
+    # Partition discovery over the bucket directories (a `bucket=*` glob
+    # logs a FileNotFoundException trace); the discovered `bucket` column
+    # is dropped so every sink sees the written schema.
+    feats = spark.read.parquet(os.path.join(args.out, "problems")).drop("bucket")
     tile_counts_anchored(
         feats, args.tile_z, "anchor_lon", "anchor_lat"
     ).write.mode("overwrite").parquet(os.path.join(args.out, "tiles"))

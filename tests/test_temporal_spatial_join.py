@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from wayproblems_spark.operators.knn import EARTH_RADIUS_M
 from wayproblems_spark.operators.spatial_join import (
+    _registered,
     cell_min_edge_m,
     level_for_radius,
     spatial_range_join,
@@ -287,6 +288,33 @@ def test_range_join_corner_residents_vs_brute(spark):
     pairs = {(r["id1"], r["id2"]) for r in got.collect()}
     assert pairs == _brute_pairs(lat, lon, radius)
     assert len(pairs) > 50
+
+
+def test_corner_drop_folds_longitude(spark):
+    """A point given as lon=315 sits in the same cell as lon=-45 (the
+    encode is periodic), so it must register in the same cells — in
+    particular be dropped as a corner resident — as its folded twin."""
+    corner_lat = math.degrees(math.asin(1.0 / math.sqrt(3.0)))
+    pts = [
+        (k, corner_lat + ((k % 5) - 2) * 0.02 + 0.007, -45.0 + ((k // 5) - 2) * 0.02 + 0.01)
+        for k in range(25)
+    ]
+
+    def cells(shift):
+        df = spark.createDataFrame(
+            [(k, lat, lon + shift) for k, lat, lon in pts],
+            "id long, lat double, lon double",
+        )
+        reg = _registered(df, "id", "lat", "lon", 12, ring=True,
+                          drop_corner_residents=True)
+        out = {}
+        for r in reg.collect():
+            out.setdefault(r["_id"], set()).add(r["cell"])
+        return out
+
+    base = cells(0.0)
+    assert 0 < len(base) < len(pts)  # some points are corner residents
+    assert cells(360.0) == base
 
 
 def test_range_join_level_guard(spark):

@@ -275,6 +275,9 @@ def build_ivf_index(
     scale: survives executor loss, frees memory, and the per-query-batch
     nprobe bucket join reads only matching buckets with no shuffle of the
     corpus side).
+
+    ``id_col`` must be unique across ``corpus``: :func:`ivf_topk` ranks
+    rows, not ids, so a duplicated id can take several top-k ranks.
     """
     spark = corpus.sparkSession
     if centroids is None:
@@ -318,7 +321,11 @@ def ivf_topk(
     ``prebuilt=build_ivf_index(...)`` to also skip the per-call corpus
     assignment (the production pattern: build once, reuse across query
     batches — per-batch cost is then the nprobe bucket join + re-rank
-    only)."""
+    only).
+
+    Corpus ``id_col`` values must be unique (in a ``prebuilt`` assigned
+    frame too): results are not de-duplicated per (query, id), so a
+    duplicated id can occupy several of a query's top-k ranks."""
     from pyspark.sql.window import Window
 
     spark = corpus.sparkSession

@@ -66,11 +66,14 @@ def _near_corner_box(lat, lon, level: int):
     is a very large expression and Catalyst inlines it wherever a filter
     references it — guarding it behind this cheap conjunct keeps the
     encode unevaluated for the ~whole globe (measured 5× on the ring
-    registration when the corner drop is active)."""
+    registration when the corner drop is active). ``lon`` is folded into
+    [-180, 180) first: the trig/grid encode is periodic, so lon=315 sits
+    in the same cell as lon=-45 and must meet the same box."""
     delta = 1000.0 / (1 << level)
     corner_lat = math.degrees(math.asin(1.0 / math.sqrt(3.0)))
+    folded = F.pmod(lon + 180.0, F.lit(360.0)) - 180.0
     return (F.abs(F.abs(lat) - corner_lat) < delta) & (
-        F.abs(F.abs(F.abs(lon) - 90.0) - 45.0) < delta
+        F.abs(F.abs(F.abs(folded) - 90.0) - 45.0) < delta
     )
 
 

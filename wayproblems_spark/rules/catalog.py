@@ -35,7 +35,6 @@ from .dsl import (
     IsPrefixInt,
     IsStrictInt,
     LanesSumMismatch,
-    Lit,
     Msg,
     Not,
     PipeCountMismatch,
@@ -48,7 +47,6 @@ from .dsl import (
 from .emitters import Emit, EmitTurnOrder, EmitTurnUnknown
 
 from dataclasses import dataclass
-from pyspark.sql import functions as F
 
 WP, REF, FOOTWAY, DEFAULTS, STRANGE, CYCLING = (
     "wayproblems", "ref", "footway", "defaults", "strange", "cycling",
@@ -106,10 +104,6 @@ class MapLookup(X):
     key: str
     mapping: tuple
 
-    def col(self, env):
-        m = F.create_map(*[F.lit(x) for kv in self.mapping for x in kv])
-        return F.element_at(m, F.coalesce(env.tags.getItem(self.key), F.lit("\x00")))
-
     def py(self, way):
         v = way["tags"].get(self.key)
         return dict(self.mapping).get(v) if v is not None else None
@@ -121,10 +115,6 @@ class NeTags(P):
 
     a: X
     b: X
-
-    def col(self, env):
-        c = self.a.col(env) != self.b.col(env)
-        return F.coalesce(c, F.lit(False))
 
     def py(self, way):
         va, vb = self.a.py(way), self.b.py(way)

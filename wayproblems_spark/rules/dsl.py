@@ -1,13 +1,13 @@
-"""Dual-target predicate/expression DSL for the rule catalogue.
+"""Predicate/expression DSL for the rule catalogue.
 
 Every rule condition and message is declared ONCE as a small expression
-tree. Each node knows how to
+tree with two render targets:
 
-* compile itself to a PySpark ``Column`` (``.col(env)``) — the production
-  path, evaluated entirely JVM-side inside one whole-stage-codegen'd
-  projection, and
-* evaluate itself on a plain Python dict (``.py(way)``) — the oracle path
-  used by property-based tests (hypothesis) and golden generation.
+* pure Python (``.py(way)``) — evaluated on a plain dict; the oracle path
+  used by property-based tests (hypothesis) and golden generation, and
+* SQL text (``rules.sqlgen``) — in the Spark dialect the production path,
+  one expression evaluated entirely JVM-side inside one whole-stage
+  codegen'd projection; in the DuckDB dialect the q34 cross-engine oracle.
 
 This removes transcription drift between the engine and its oracle: both
 derive from the same catalogue objects.
@@ -31,10 +31,7 @@ Reference semantics reproduced here (citations into
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from dataclasses import dataclass
 
 INT_SENTINEL = 2147483647
 INT32_MIN, INT32_MAX = -2147483648, 2147483647
@@ -49,14 +46,6 @@ _prefix_int = re.compile(PREFIX_INT_RE)
 _prefix_float = re.compile(PREFIX_FLOAT_RE)
 
 
-class Env:
-    """Spark compile context: the columns rule expressions may reference."""
-
-    def __init__(self, tags: Column, closed: Column):
-        self.tags = tags
-        self.closed = closed
-
-
 # ---------------------------------------------------------------------------
 # Value expressions (string / long / double, nullable)
 # ---------------------------------------------------------------------------
@@ -64,9 +53,6 @@ class Env:
 
 class X:
     """Base expression node."""
-
-    def col(self, env: Env) -> Column:
-        raise NotImplementedError
 
     def py(self, way: dict):
         raise NotImplementedError
@@ -78,22 +64,8 @@ class Tag(X):
 
     key: str
 
-    def col(self, env):
-        return env.tags.getItem(self.key)
-
     def py(self, way):
         return way["tags"].get(self.key)
-
-
-@dataclass(frozen=True)
-class Lit(X):
-    value: object
-
-    def col(self, env):
-        return F.lit(self.value)
-
-    def py(self, way):
-        return self.value
 
 
 def _py_strict_int(v: str | None):
@@ -122,16 +94,6 @@ class IntOf(X):
 
     key: str
 
-    def col(self, env):
-        t = env.tags.getItem(self.key)
-        # try_cast: ANSI mode is on by default in Spark 4 and AND guards
-        # are not guaranteed to short-circuit a throwing cast
-        tl = t.try_cast("long")
-        ok = t.rlike(STRICT_INT_RE) & tl.between(INT32_MIN, INT32_MAX)
-        return F.when(F.coalesce(ok, F.lit(False)), tl).otherwise(
-            F.lit(INT_SENTINEL).cast("long")
-        )
-
     def py(self, way):
         n = _py_strict_int(way["tags"].get(self.key))
         return INT_SENTINEL if n is None else n
@@ -143,27 +105,8 @@ class IntStr(X):
 
     key: str
 
-    def col(self, env):
-        return IntOf(self.key).col(env).cast("string")
-
     def py(self, way):
         return str(IntOf(self.key).py(way))
-
-
-@dataclass(frozen=True)
-class SumIntStr(X):
-    """Rendering of IntOf(a)+... — unused in reference, kept for symmetry."""
-
-    keys: tuple
-
-    def col(self, env):
-        c = IntOf(self.keys[0]).col(env)
-        for k in self.keys[1:]:
-            c = c + IntOf(k).col(env)
-        return c.cast("string")
-
-    def py(self, way):
-        return str(sum(IntOf(k).py(way) for k in self.keys))
 
 
 # ---------------------------------------------------------------------------
@@ -172,7 +115,7 @@ class SumIntStr(X):
 
 
 class P(X):
-    """Base predicate; col() returns a non-null boolean Column."""
+    """Base predicate; renders to a non-null boolean."""
 
     def __and__(self, other):
         return And(self, other)
@@ -188,9 +131,6 @@ class P(X):
 class Has(P):
     key: str
 
-    def col(self, env):
-        return F.coalesce(F.map_contains_key(env.tags, self.key), F.lit(False))
-
     def py(self, way):
         return self.key in way["tags"]
 
@@ -202,9 +142,6 @@ class Eq(P):
     key: str
     value: str
 
-    def col(self, env):
-        return env.tags.getItem(self.key).eqNullSafe(F.lit(self.value))
-
     def py(self, way):
         return way["tags"].get(self.key) == self.value
 
@@ -215,10 +152,6 @@ class InL(P):
 
     key: str
     values: tuple
-
-    def col(self, env):
-        t = env.tags.getItem(self.key)
-        return F.coalesce(t.isin(*self.values), F.lit(False))
 
     def py(self, way):
         return way["tags"].get(self.key) in self.values
@@ -238,11 +171,6 @@ def FalseKV(key: str) -> InL:
 class IsStrictInt(P):
     key: str
 
-    def col(self, env):
-        t = env.tags.getItem(self.key)
-        ok = t.rlike(STRICT_INT_RE) & t.try_cast("long").between(INT32_MIN, INT32_MAX)
-        return F.coalesce(ok, F.lit(False))
-
     def py(self, way):
         return _py_strict_int(way["tags"].get(self.key)) is not None
 
@@ -252,10 +180,6 @@ class IsPrefixInt(P):
     """maxspeed-style prefix stoi succeeds (cpp:486; quirk Q4)."""
 
     key: str
-
-    def col(self, env):
-        t = env.tags.getItem(self.key)
-        return F.coalesce(t.rlike(PREFIX_INT_RE), F.lit(False))
 
     def py(self, way):
         v = way["tags"].get(self.key)
@@ -268,12 +192,6 @@ class IsPrefixFloat(P):
 
     key: str
 
-    def col(self, env):
-        t = env.tags.getItem(self.key)
-        return F.coalesce(
-            F.regexp_extract(t, PREFIX_FLOAT_RE, 0) != "", F.lit(False)
-        )
-
     def py(self, way):
         return _py_prefix_float(way["tags"].get(self.key)) is not None
 
@@ -285,12 +203,6 @@ class FloatCmp(P):
     key: str
     op: str
     bound: float
-
-    def col(self, env):
-        t = env.tags.getItem(self.key)
-        v = F.regexp_extract(t, PREFIX_FLOAT_RE, 0).try_cast("double")
-        c = v < self.bound if self.op == "lt" else v > self.bound
-        return F.coalesce(c, F.lit(False))
 
     def py(self, way):
         v = _py_prefix_float(way["tags"].get(self.key))
@@ -307,17 +219,6 @@ class IntCmp(P):
     op: str  # 'eq' | 'le' | 'gt' | 'lt'
     bound: int
 
-    def col(self, env):
-        v = IntOf(self.key).col(env)
-        b = F.lit(self.bound).cast("long")
-        c = {
-            "eq": v == b,
-            "le": v <= b,
-            "gt": v > b,
-            "lt": v < b,
-        }[self.op]
-        return F.coalesce(c, F.lit(False))
-
     def py(self, way):
         v = IntOf(self.key).py(way)
         b = self.bound
@@ -328,12 +229,6 @@ class IntCmp(P):
 class LanesSumMismatch(P):
     """lanes != lanes:forward + lanes:backward (cpp:670-680), sentinel math
     done in long so INT_MAX+INT_MAX can't overflow (C++ UB avoided)."""
-
-    def col(self, env):
-        lanes = IntOf("lanes").col(env)
-        fwd = IntOf("lanes:forward").col(env)
-        bck = IntOf("lanes:backward").col(env)
-        return lanes != (fwd + bck)
 
     def py(self, way):
         return IntOf("lanes").py(way) != (
@@ -349,12 +244,6 @@ class PipeCountMismatch(P):
     key: str
     lanekey: str
 
-    def col(self, env):
-        lanes = IntOf(self.key).col(env)
-        t = env.tags.getItem(self.lanekey)
-        pipes = F.length(t) - F.length(F.regexp_replace(t, r"\|", ""))
-        return F.coalesce(lanes != (pipes + 1).cast("long"), F.lit(False))
-
     def py(self, way):
         v = way["tags"].get(self.lanekey)
         if v is None:
@@ -366,9 +255,6 @@ class PipeCountMismatch(P):
 class Closed(P):
     """ends_have_same_id (cpp:330) — first node ref == last node ref."""
 
-    def col(self, env):
-        return env.closed
-
     def py(self, way):
         return bool(way["closed"])
 
@@ -376,9 +262,6 @@ class Closed(P):
 @dataclass(frozen=True)
 class Not(P):
     a: P
-
-    def col(self, env):
-        return ~self.a.col(env)
 
     def py(self, way):
         return not self.a.py(way)
@@ -388,12 +271,6 @@ class And(P):
     def __init__(self, *terms):
         self.terms = terms
 
-    def col(self, env):
-        c = self.terms[0].col(env)
-        for t in self.terms[1:]:
-            c = c & t.col(env)
-        return c
-
     def py(self, way):
         return all(t.py(way) for t in self.terms)
 
@@ -402,28 +279,8 @@ class Or(P):
     def __init__(self, *terms):
         self.terms = terms
 
-    def col(self, env):
-        c = self.terms[0].col(env)
-        for t in self.terms[1:]:
-            c = c | t.col(env)
-        return c
-
     def py(self, way):
         return any(t.py(way) for t in self.terms)
-
-
-TRUE = Lit(True)
-
-
-@dataclass(frozen=True)
-class LitP(P):
-    value: bool
-
-    def col(self, env):
-        return F.lit(self.value)
-
-    def py(self, way):
-        return self.value
 
 
 # ---------------------------------------------------------------------------
@@ -440,17 +297,6 @@ class Msg:
 
     template: str
     args: tuple = ()
-
-    def col(self, env) -> Column:
-        if not self.args:
-            rendered = F.lit(self.template)
-        else:
-            cols = [
-                F.coalesce(a.col(env).cast("string"), F.lit(NULL_STR))
-                for a in self.args
-            ]
-            rendered = F.format_string(self.template.replace("%", "%%").replace("%%s", "%s"), *cols)
-        return F.substring(rendered, 1, TRUNC)
 
     def py(self, way) -> str:
         vals = []

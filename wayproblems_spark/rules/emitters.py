@@ -1,5 +1,5 @@
-"""Emission-site objects: each compiles to Catalyst expressions and
-evaluates in pure Python (the oracle path).
+"""Emission-site objects: each evaluates in pure Python (the oracle path)
+and is rendered to SQL by ``rules.sqlgen`` (the production path).
 
 An emitter contributes elements of type
 ``struct<site:int, sub:int, layer:string, style:string, problem:string>``
@@ -13,10 +13,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from .dsl import NULL_STR, TRUNC, Env, Has, Msg, P
+from .dsl import TRUNC, Has, Msg, P
 
 EMIT_DDL = "struct<site:int,sub:int,layer:string,style:string,problem:string>"
 
@@ -42,22 +39,8 @@ TURN_PRIORITY = {
     "reverse": 10,
 }
 
-_token_split = re.compile(r"[|;]+")
-
-
-def _null_emit() -> Column:
-    return F.lit(None).cast(EMIT_DDL)
-
-
-def _mk(site: int, sub, layer: str, style: str, problem: Column) -> Column:
-    sub_col = sub if isinstance(sub, Column) else F.lit(sub)
-    return F.struct(
-        F.lit(site).alias("site"),
-        sub_col.cast("int").alias("sub"),
-        F.lit(layer).alias("layer"),
-        F.lit(style).alias("style"),
-        problem.alias("problem"),
-    )
+TOKEN_SPLIT_RE = "[|;]+"
+_token_split = re.compile(TOKEN_SPLIT_RE)
 
 
 @dataclass(frozen=True)
@@ -68,9 +51,6 @@ class Emit:
     layer: str
     style: str
     msg: Msg
-
-    def spark_items(self, env: Env, site: int) -> list[Column]:
-        return [F.when(self.cond.col(env), _mk(site, 0, self.layer, self.style, self.msg.col(env)))]
 
     def eval_py(self, site: int, way: dict) -> list[dict]:
         if self.cond.py(way):
@@ -93,33 +73,11 @@ class EmitTurnUnknown:
 
     key: str  # 'lanes' | 'lanes:forward' | 'lanes:backward'
 
-    def _guard(self) -> P:
+    def guard(self) -> P:
         return Has(self.key) & Has("turn:" + self.key)
 
-    def spark_arrays(self, env: Env, site: int) -> list[Column]:
-        turnkey = "turn:" + self.key
-        t = env.tags.getItem(turnkey)
-        toks = F.split(t, r"[|;]+")
-        tmpl = f"{self.key}=%s contains lane turn %s which is unknown"
-        items = F.transform(
-            toks,
-            lambda x, i: F.when(
-                ~x.isin(*VALID_TURNS),
-                _mk(
-                    site,
-                    i,
-                    "wayproblems",
-                    "default",
-                    F.substring(
-                        F.format_string(tmpl, F.coalesce(t, F.lit(NULL_STR)), x), 1, TRUNC
-                    ),
-                ),
-            ),
-        )
-        return [F.when(self._guard().col(env), items).otherwise(F.array(_null_emit()))]
-
     def eval_py(self, site: int, way: dict) -> list[dict]:
-        if not self._guard().py(way):
+        if not self.guard().py(way):
             return []
         v = way["tags"]["turn:" + self.key]
         out = []
@@ -139,63 +97,16 @@ class EmitTurnOrder:
 
     Fold over tokens: unknown/empty token (priority 0) breaks the scan;
     a priority increase after a named token emits once and breaks.
-    Implemented JVM-side with ``F.aggregate`` — no Python in the hot path.
+    Rendered JVM-side as an ``aggregate`` lambda — no Python in the hot path.
     """
 
     key: str
 
-    def _guard(self) -> P:
+    def guard(self) -> P:
         return Has(self.key) & Has("turn:" + self.key)
 
-    def spark_arrays(self, env: Env, site: int) -> list[Column]:
-        turnkey = "turn:" + self.key
-        t = env.tags.getItem(turnkey)
-        toks = F.split(t, r"[|;]+")
-        prio = F.create_map(
-            *[F.lit(x) for kv in TURN_PRIORITY.items() for x in kv]
-        )
-
-        def mkacc(prev, pname, stop, a, b):
-            return F.struct(
-                prev.alias("prev"), pname.alias("pname"), stop.alias("stop"),
-                a.alias("a"), b.alias("b"),
-            )
-
-        acc0 = mkacc(
-            F.lit(99999), F.lit(""), F.lit(False),
-            F.lit(None).cast("string"), F.lit(None).cast("string"),
-        )
-
-        def step(acc, x):
-            p = F.coalesce(F.element_at(prio, x), F.lit(0))
-            keep = mkacc(acc["prev"], acc["pname"], acc["stop"], acc["a"], acc["b"])
-            stopped = mkacc(acc["prev"], acc["pname"], F.lit(True), acc["a"], acc["b"])
-            bad = mkacc(acc["prev"], acc["pname"], F.lit(True), acc["pname"], x)
-            adv = mkacc(p, x, F.lit(False), acc["a"], acc["b"])
-            return (
-                F.when(acc["stop"], keep)
-                .when(p == 0, stopped)
-                .when((p > acc["prev"]) & (acc["pname"] != ""), bad)
-                .otherwise(adv)
-            )
-
-        res = F.aggregate(toks, acc0, step)
-        tmpl = f"turn:{self.key} has turn ...%s|%s..."
-        emit = F.when(
-            res["a"].isNotNull(),
-            _mk(
-                site, 0, "wayproblems", "default",
-                F.substring(F.format_string(tmpl, res["a"], res["b"]), 1, TRUNC),
-            ),
-        )
-        return [
-            F.when(self._guard().col(env), F.array(emit)).otherwise(
-                F.array(_null_emit())
-            )
-        ]
-
     def eval_py(self, site: int, way: dict) -> list[dict]:
-        if not self._guard().py(way):
+        if not self.guard().py(way):
             return []
         v = way["tags"]["turn:" + self.key]
         prev, pname = 99999, ""

@@ -3,8 +3,13 @@ Catalyst projection (SURVEY.md §2.1 P5+P6).
 
 Physical shape: gate filter (pushed to the scan) → a single narrow ``select``
 building an ``array<struct<site,sub,layer,style,problem>>`` of ~230
-``when(...)`` elements → ``explode``. No shuffle, no Python — the entire rule
+``CASE WHEN`` elements → ``explode``. No shuffle, no Python — the entire rule
 evaluation runs inside whole-stage codegen.
+
+The catalogue has two render targets (``rules.dsl``): the Python oracle
+(``rules.oracle``) and SQL text (``rules.sqlgen``). This module takes the
+Spark SQL dialect's single expression for the multi-emit array; the DuckDB
+dialect of the same renderer is the q34 cross-engine oracle.
 
 Input contract (``ways`` DataFrame):
     way_id long, version int, changeset long, uid long, user string,
@@ -14,12 +19,13 @@ Optional passthrough column: ``geom array<struct<lon:double,lat:double>>``.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .catalog import CATALOG, HIGHWAY_VALID
-from .dsl import Env
-from .emitters import Emit, EMIT_DDL
+from .catalog import HIGHWAY_VALID
+from .sqlgen import emissions_sql
 
 PROBLEM_LAYERS = ("wayproblems", "ref", "footway", "defaults", "strange", "cycling")
 
@@ -32,31 +38,13 @@ def gate(ways: DataFrame) -> DataFrame:
     return ways.filter(F.col("tags").getItem("highway").isin(*HIGHWAY_VALID))
 
 
-def emissions_column(env: Env) -> Column:
-    """array<struct> of all emission sites; nulls filtered at the end."""
-    singles: list[Column] = []
-    token_arrays: list[Column] = []
-    for site, emitter in enumerate(CATALOG):
-        if isinstance(emitter, Emit):
-            singles.extend(emitter.spark_items(env, site))
-        else:
-            token_arrays.extend(emitter.spark_arrays(env, site))
-    combined = F.concat(F.array(*singles), *token_arrays)
-    return F.filter(combined, lambda x: x.isNotNull())
-
-
-# Building the ~230-site Column tree costs seconds of py4j round-trips; the
-# expression is input-independent (references only `tags`/`_closed`), so it
-# is built once per process and reused across every problems() call.
-_EMISSIONS_CACHE: dict = {}
-
-
+# The catalogue renders to one Spark SQL expression (rules.sqlgen), so the
+# driver crosses py4j once instead of once per expression node. The
+# expression is input-independent (it references only `tags`/`_closed`), so
+# it is built once per process and reused across every problems() call.
+@functools.cache
 def _canonical_emissions() -> Column:
-    key = "emissions"
-    if key not in _EMISSIONS_CACHE:
-        env = Env(tags=F.col("tags"), closed=F.col("_closed"))
-        _EMISSIONS_CACHE[key] = F.explode(emissions_column(env))
-    return _EMISSIONS_CACHE[key]
+    return F.explode(F.expr(emissions_sql()))
 
 
 def problems(ways: DataFrame, apply_gate: bool = True) -> DataFrame:
