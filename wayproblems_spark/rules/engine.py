@@ -38,8 +38,8 @@ def gate(ways: DataFrame) -> DataFrame:
     return ways.filter(F.col("tags").getItem("highway").isin(*HIGHWAY_VALID))
 
 
-# The catalogue renders to one Spark SQL expression (rules.sqlgen), so the
-# driver crosses py4j once instead of once per expression node. The
+# The catalogue renders to one Spark SQL expression (rules.sqlgen), so
+# building it crosses py4j once instead of once per expression node. The
 # expression is input-independent (it references only `tags`/`_closed`), so
 # it is built once per process and reused across every problems() call.
 @functools.cache
