@@ -12,7 +12,14 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from wayproblems_spark.operators.cells import latlon_to_grid, latlon_to_grid_ring
-from wayproblems_spark.operators.knn import EARTH_RADIUS_M, knn_nearest_way
+from wayproblems_spark.operators.knn import (
+    _ACCEPT_FACTOR,
+    _BRUTE_CUTOVER,
+    EARTH_RADIUS_M,
+    _accept_chord2,
+    knn_nearest_way,
+)
+from tests.test_knn_segments import ladder_fixture
 
 # S2 face-0/1 edge runs along lon=45°; cube corners sit at lat ±35.264°,
 # lon ∈ {45, 135, -45, -135}.
@@ -89,6 +96,29 @@ def test_knn_exact_at_face_edges_and_corners(spark):
         for pid in exp:
             assert got[pid][0] == exp[pid][0], (level, pid, got[pid], exp[pid])
             assert abs(got[pid][1] - exp[pid][1]) < 1e-6 * max(1.0, exp[pid][1])
+
+
+def test_knn_ladder_rungs_exact(spark):
+    """The segment ladder fixture against the vertex oracle: more than
+    _BRUTE_CUTOVER points escape tier 1, so the rungs run."""
+    ways, pts = ladder_fixture(np.random.default_rng(5))
+    resolved = spark.createDataFrame(
+        ways, "way_id long, geom array<struct<lon:double,lat:double>>"
+    )
+    pdf = spark.createDataFrame(pts, "point_id long, lat double, lon double")
+    exp = _brute(ways, pts)
+    radius_m = 2.0 * EARTH_RADIUS_M * np.arcsin(
+        np.sqrt(_accept_chord2(_ACCEPT_FACTOR, 12)) / 2.0
+    )
+    assert sum(d >= radius_m for _, d in exp.values()) > _BRUTE_CUTOVER
+    got = {
+        r["point_id"]: (r["way_id"], r["dist_m"])
+        for r in knn_nearest_way(pdf, resolved, level=12).collect()
+    }
+    assert set(got) == set(exp)
+    for pid in exp:
+        assert got[pid][0] == exp[pid][0], (pid, got[pid], exp[pid])
+        assert abs(got[pid][1] - exp[pid][1]) < 1e-6 * max(1.0, exp[pid][1])
 
 
 def test_ring_covers_all_adjacent_cells_noncorner(spark):

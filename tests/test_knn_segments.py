@@ -7,7 +7,13 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from wayproblems_spark.operators.knn import EARTH_RADIUS_M, knn_nearest_way_segments
+from wayproblems_spark.operators.knn import (
+    _BRUTE_CUTOVER,
+    _SEG_ACCEPT_FACTOR,
+    EARTH_RADIUS_M,
+    _accept_chord2,
+    knn_nearest_way_segments,
+)
 
 
 def _xyz(lat, lon):
@@ -62,6 +68,29 @@ def _mk(rng):
     return ways, pts
 
 
+def ladder_fixture(rng):
+    """40 short two-vertex ways and 600 points spread over 49–52°N ×
+    7–10°E: at level 12 most points sit farther from every way than the
+    tier-1 acceptance radius, so more than _BRUTE_CUTOVER escape and the
+    ladder rungs run before the brute tail."""
+    ways = []
+    for wid in range(1, 41):
+        la = rng.uniform(49, 52)
+        lo = rng.uniform(7, 10)
+        ways.append(
+            (wid, [
+                {"lon": float(lo), "lat": float(la)},
+                {"lon": float(lo + rng.uniform(-0.02, 0.02)),
+                 "lat": float(la + rng.uniform(-0.02, 0.02))},
+            ])
+        )
+    pts = [
+        (pid, float(rng.uniform(49, 52)), float(rng.uniform(7, 10)))
+        for pid in range(1, 601)
+    ]
+    return ways, pts
+
+
 def _brute(ways, pts):
     segs = []
     for wid, geom in ways:
@@ -81,22 +110,32 @@ def _brute(ways, pts):
 
 
 def test_segment_knn_exact_vs_oracle(spark):
-    rng = np.random.default_rng(23)
-    ways, pts = _mk(rng)
-    resolved = spark.createDataFrame(
-        ways, "way_id long, geom array<struct<lon:double,lat:double>>"
+    ladder = ladder_fixture(np.random.default_rng(5))
+    # the ladder fixture drives the rungs, not only the brute tail: every
+    # point beyond the tier-1 acceptance radius escapes tier 1
+    radius_m = 2.0 * EARTH_RADIUS_M * np.arcsin(
+        np.sqrt(_accept_chord2(_SEG_ACCEPT_FACTOR, 12)) / 2.0
     )
-    pdf = spark.createDataFrame(pts, "point_id long, lat double, lon double")
-    exp = _brute(ways, pts)
-    for level in (10, 12):
-        got = {
-            r["point_id"]: (r["way_id"], r["dist_m"])
-            for r in knn_nearest_way_segments(pdf, resolved, level=level).collect()
-        }
-        assert set(got) == set(exp)
-        for pid in exp:
-            assert got[pid][0] == exp[pid][0], (level, pid, got[pid], exp[pid])
-            assert abs(got[pid][1] - exp[pid][1]) < 1e-6 * max(1.0, exp[pid][1])
+    far = sum(d >= radius_m for _, d in _brute(*ladder).values())
+    assert far > _BRUTE_CUTOVER
+    for (ways, pts), levels in (
+        (_mk(np.random.default_rng(23)), (10, 12)),
+        (ladder, (12,)),
+    ):
+        resolved = spark.createDataFrame(
+            ways, "way_id long, geom array<struct<lon:double,lat:double>>"
+        )
+        pdf = spark.createDataFrame(pts, "point_id long, lat double, lon double")
+        exp = _brute(ways, pts)
+        for level in levels:
+            got = {
+                r["point_id"]: (r["way_id"], r["dist_m"])
+                for r in knn_nearest_way_segments(pdf, resolved, level=level).collect()
+            }
+            assert set(got) == set(exp)
+            for pid in exp:
+                assert got[pid][0] == exp[pid][0], (level, pid, got[pid], exp[pid])
+                assert abs(got[pid][1] - exp[pid][1]) < 1e-6 * max(1.0, exp[pid][1])
 
 
 def test_segment_knn_beats_vertex_distance(spark):

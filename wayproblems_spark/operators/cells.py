@@ -232,39 +232,6 @@ def with_cell(df: DataFrame, lat_col: str, lon_col: str, level: int, out: str = 
     return df.withColumn(out, cell_udf(level)(F.col(lat_col), F.col(lon_col)))
 
 
-def neighbor_cells_udf(level: int):
-    """(lat, lon) → array of the 3×3 same-face cell neighborhood at `level`.
-
-    Cross-face neighbors are clamped to the face edge (documented limitation;
-    exactness of consumers is preserved by their escalation/fallback tiers).
-    """
-    key = ("nbr", level)
-    if key not in _udf_cache:
-
-        @pandas_udf("array<long>")
-        def _nbr(lat: pd.Series, lon: pd.Series) -> pd.Series:
-            la, lo = lat.to_numpy(), lon.to_numpy()
-            x, y, z = _xyz(la.astype(np.float64), lo.astype(np.float64))
-            face, u, v = _face_uv(x, y, z)
-            i = _st_to_ij(_uv_to_st(u)).astype(np.int64)
-            j = _st_to_ij(_uv_to_st(v)).astype(np.int64)
-            step = 1 << (MAX_LEVEL - level)
-            lim = (1 << MAX_LEVEL) - 1
-            cells = []
-            for di in (-step, 0, step):
-                for dj in (-step, 0, step):
-                    ii = np.clip(i + di, 0, lim).astype(np.uint64)
-                    jj = np.clip(j + dj, 0, lim).astype(np.uint64)
-                    cells.append(faceij_to_id(face, ii, jj, level).view(np.int64))
-            # no per-row dedup (only face-edge clamps produce duplicates and
-            # downstream min-aggregations are duplicate-insensitive)
-            mat = np.stack(cells, axis=1)
-            return pd.Series(mat.tolist())
-
-        _udf_cache[key] = _nbr
-    return _udf_cache[key]
-
-
 def latlon_to_grid(lat: np.ndarray, lon: np.ndarray, level: int) -> np.ndarray:
     """Packed face/i/j grid id at `level`: (face<<58)|(gi<<29)|gj.
 

@@ -51,20 +51,6 @@ def word_shingles(text_col, k: int = 5):
     )
 
 
-def minhash_signature(shingles_col, num_hashes: int = 64):
-    """array<long> of per-seed min hashes; empty-shingle docs get nulls.
-    NOTE: higher-order array expressions are interpreted (not codegen) —
-    this form is kept for small-data/API use; the batch production path is
-    the exploded codegen pipeline ``_shingle_hash_rows`` +
-    ``_band_agg_columns``."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda seed: F.array_min(
-            F.transform(shingles_col, lambda s: F.xxhash64(seed, s))
-        ),
-    )
-
-
 def _shingle_hash_rows(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """(_id, hs) — one row per k-word-shingle OCCURRENCE, entirely in
     whole-stage codegen (round 7; guide §4.1 "prefer built-ins", §1.2

@@ -1,51 +1,81 @@
 """G5 — kNN nearest-way assignment (exact, bit-stable across parallelism).
 
-Semantics: for each point, the nearest way measured as the minimum haversine
-distance to any of the way's vertices, tie-broken by smallest way_id —
+One tiered search (``_tiered_nearest``) serves two candidate kinds:
+
+  vertices (knn_nearest_way): a way's distance is the minimum haversine
+          distance to any of its vertices.
+  segments (knn_nearest_way_segments): a way's distance is the minimum
+          distance to any point ON its polyline (great-circle arcs between
+          consecutive vertices) — a long segment passing a point far from
+          both endpoints counts at its closest arc point.
+
+Either way each point gets its nearest way, tie-broken by smallest way_id —
 a total order, so results are identical regardless of cluster size or
 partitioning (the north_rule bit-stability clause).
 
-Physical plan (one vertex-side index, no candidate-row explosion, ZERO
-Python on any big row — both the vertex and the point grid encodes are
-pure-JVM expressions over unit-sphere XYZ; numpy survives only in the
-face-edge ring-wrap sliver and the tiny escapee ring expansion):
+A candidate kind supplies only what differs: the per-cell index (one row
+per grid cell carrying a struct array of candidates), the squared-chord
+distance from a point to one candidate, the acceptance factors (fraction
+of the S2 min-edge under which a best is provably the global one, at the
+index level and at the coarse rung levels), the flat candidate frame the
+rungs re-key, and the frame the brute tail scans. ZERO Python runs on any
+big row — both the candidate and the point grid encodes are pure-JVM
+expressions over unit-sphere XYZ; numpy survives only in the face-edge
+ring-wrap sliver and the tiny escapee ring expansion.
 
-  index:  each way vertex registers into its own grid cell AND every
+  index:  vertices: each vertex registers into its own grid cell AND every
           touching cell (wrapped 3×3 ring, CROSS-FACE CORRECT). Interior
           vertices (>99.9% at practical levels) expand their ring with
           pure JVM bit arithmetic over the packed grid id; only the thin
           face-edge sliver (fraction ≈ 4/2^level) goes through the numpy
-          wrap UDF (cells.latlon_to_grid_ring). One groupBy collapses the
-          vertex side to one row per cell carrying a struct array. Built
-          once; at cluster scale it is reusable across point batches.
+          wrap UDF (cells.latlon_to_grid_ring). Built once; at cluster
+          scale it is reusable across point batches (``prebuilt=``).
+          segments: each segment registers at every wrapped-ring cell of
+          ≤½-min-edge spaced samples along its chord, so a long segment
+          crossing a cell far from both endpoints is still a candidate
+          there (the failure mode a vertex-only registration has).
+          One groupBy collapses either side to one row per cell.
   tier 1: each point joins its SINGLE cell against the index — no point
           explosion, join output is one row per point — then the cell's
           struct array explodes straight into a map-side-partial
           min(struct(c2, way_id)) grouped by the point's carried columns
           (all whole-stage codegen; interpreted higher-order array
-          expressions measured ~10× slower here).
-          Acceptance: best chord-dist < 0.95 × S2 min-edge(level) proves
-          no vertex outside the ring can be closer (empirically the
-          outside-ring minimum is ≥ 1.037 min-edge; see cells.py). Points
+          expressions measured ~10× slower here). A point is accepted
+          when its best chord-dist < factor × S2 min-edge(level). Points
           in cube-CORNER cells (ring is only 7 cells there; 24 cells per
           level, all mid-ocean on Earth) are never accepted by the bound —
           they escalate regardless.
   ladder: the (rare) escalated points are BROADCAST, ring-expanded at a
           coarser level (UDF wrap only on this small side), against the
-          CACHED vertex frame re-keyed to coarse cells by JVM bit shifts —
-          map-side hash join, no second vertex-side Python pass — then one
-          tiny per-point min. The FIRST rung is d=1: escapees
-          overwhelmingly just miss the tight tier-1 bound (measured
-          108,977/109,019 on the bench corpus), and its ring has 16×
-          fewer sub-cells than a d=3 jump; later rungs grow the radius 8×
-          per step so isolated points converge in O(log) rungs. Every
+          CACHED flat candidate frame (vertices: the vertex frame;
+          segments: the exploded index) re-keyed to coarse cells by JVM
+          bit shifts — map-side hash join, no second candidate-side Python
+          pass — then one tiny per-point min. The FIRST rung is d=1:
+          escapees overwhelmingly just miss the tight tier-1 bound
+          (measured 108,977/109,019 on the bench corpus), and its ring has
+          16× fewer sub-cells than a d=3 jump; later rungs grow the radius
+          8× per step so isolated points converge in O(log) rungs. Every
           rung's accepted best is the global argmin (the ring-bound proof
           is per-rung), so the ladder shape never changes results.
   brute:  once the surviving population drops below _BRUTE_CUTOVER (or
           the ladder exhausts), the remainder is broadcast against the
-          vertex set (BroadcastNestedLoopJoin) — exact by construction,
-          and bounded: the stream side is one cached vertex scan, the
+          candidate set (BroadcastNestedLoopJoin) — exact by construction,
+          and bounded: the stream side is one cached candidate scan, the
           broadcast side is a few hundred points at most.
+
+Soundness of the acceptance factors:
+  vertices, 0.95 at every level: stress sampling across face edges and
+          corners measured the true outside-ring minimum at ≥ 1.037
+          min-edge (see cells.py), so 0.95 keeps a 9% sound margin while
+          barely widening escalation.
+  segments, 0.7 at tier 1: the arc is sampled at chord spacing piece ≤
+          0.5·min_edge(level); any arc point lies ≤ piece/2 from a sample.
+          If every sample of a segment is outside p's wrapped ring, its
+          nearest arc point is ≥ 1.037·min_edge − piece/2 ≥ 0.78·min_edge
+          away — so accepting only when best < 0.7·min_edge(level) is
+          exact.
+  segments, 0.85 on the rungs: the rungs reuse the fine samples at coarse
+          cells, where piece ≪ min_edge(coarse).
 
 Distances: trig-free squared 3D chord per candidate (strictly monotonic in
 great-circle distance), converted to haversine meters only for each point's
@@ -73,19 +103,20 @@ EARTH_RADIUS_M = 6371008.8
 
 # Minimum S2 cell edge length at level L: kMinEdge ≈ 2*sqrt(2)/3 / 2^L rad.
 _MIN_EDGE_RAD = 2.0 * math.sqrt(2.0) / 3.0
-# Acceptance uses 0.95 × min-edge: stress sampling across face edges and
-# corners measured the true outside-ring minimum at ≥ 1.037 min-edge, so
-# 0.95 keeps a 9% sound margin while barely widening escalation.
+# Acceptance factors × min-edge (soundness: module docstring): vertices
+# at every level; segments at the index level and on the coarse rungs.
 _ACCEPT_FACTOR = 0.95
+_SEG_ACCEPT_FACTOR = 0.7
+_RUNG_SEG_FACTOR = 0.85
 
 _GJ_MASK = (1 << 29) - 1
 
 # Ladder → brute-tail cutover population: below this many escapees the
-# one-shot broadcast-NL tail (n_esc × n_verts chord evals, ≤ ~200 × a few
-# million ≈ low hundreds of millions — sub-second-to-seconds at any core
-# count) undercuts even ONE more rung, whose cost floor is a full cached-
-# vertex re-key scan + join probe regardless of escapee count. Purely a
-# physical-plan switch: both paths are exact, results identical.
+# one-shot broadcast-NL tail (n_esc × n_candidates chord evals, ≤ ~200 × a
+# few million ≈ low hundreds of millions — sub-second-to-seconds at any
+# core count) undercuts even ONE more rung, whose cost floor is a full
+# cached-candidate re-key scan + join probe regardless of escapee count.
+# Purely a physical-plan switch: both paths are exact, results identical.
 _BRUTE_CUTOVER = 200
 
 # Escapee-side broadcast hints are GATED on the measured escapee count:
@@ -108,18 +139,10 @@ def cell_min_edge_m(level: int) -> float:
     return _MIN_EDGE_RAD / (1 << level) * EARTH_RADIUS_M
 
 
-def _accept_chord2(level: int) -> float:
-    """Squared unit-sphere chord corresponding to the acceptance arc."""
-    theta = _ACCEPT_FACTOR * _MIN_EDGE_RAD / (1 << level)
+def _accept_chord2(factor: float, level: int) -> float:
+    """Squared unit-sphere chord of the acceptance arc factor × min-edge."""
+    theta = factor * _MIN_EDGE_RAD / (1 << level)
     return (2.0 * math.sin(theta / 2.0)) ** 2
-
-
-def haversine_m(lat1, lon1, lat2, lon2):
-    rl1, rl2 = F.radians(lat1), F.radians(lat2)
-    dphi = F.radians(lat2 - lat1) / 2.0
-    dlam = F.radians(lon2 - lon1) / 2.0
-    a = F.sin(dphi) ** 2 + F.cos(rl1) * F.cos(rl2) * F.sin(dlam) ** 2
-    return 2.0 * EARTH_RADIUS_M * F.asin(F.sqrt(a))
 
 
 def _with_xyz(df: DataFrame, lat_col: str, lon_col: str, prefix: str) -> DataFrame:
@@ -138,6 +161,14 @@ def _with_xyz(df: DataFrame, lat_col: str, lon_col: str, prefix: str) -> DataFra
 def _chord2(px, py, pz, vx, vy, vz):
     dx, dy, dz = px - vx, py - vy, pz - vz
     return dx * dx + dy * dy + dz * dz
+
+
+def _vertex_chord2(c):
+    """Squared chord from the point (px, py, pz) to the vertex whose fields
+    ``c(name)`` returns."""
+    return _chord2(
+        F.col("px"), F.col("py"), F.col("pz"), c("vx"), c("vy"), c("vz")
+    )
 
 
 def _chord2_to_m(c2):
@@ -297,6 +328,204 @@ def build_knn_index(
     return level, verts_g, index
 
 
+def _persister(track_persists: list | None):
+    """persist(df) that also appends the cached frame to ``track_persists``
+    (when given) so the caller can unpersist it once the result is used."""
+
+    def persist(df):
+        df = df.persist()
+        if track_persists is not None:
+            track_persists.append(df)
+        return df
+
+    return persist
+
+
+def _tiered_nearest(
+    points: DataFrame,
+    level: int,
+    coarse_level: int | None,
+    index: DataFrame,
+    *,
+    dist,
+    tier_factor: float,
+    rung_factor: float,
+    rung_frame: DataFrame,
+    brute_frame: DataFrame,
+    persist,
+) -> DataFrame:
+    """The tiered search both kNN variants run (module docstring).
+
+    ``index``: (cell, vs: array<struct<..., way_id>>) at ``level``.
+    ``dist(c)``: squared chord from the point (px, py, pz) to the candidate
+    whose fields ``c(name)`` returns — struct fields of ``vs`` in tier 1,
+    top-level columns of ``rung_frame`` / ``brute_frame`` after it.
+    ``tier_factor`` / ``rung_factor``: acceptance × min-edge at ``level``
+    and at each coarse rung. ``rung_frame``: flat candidates (with way_id)
+    keyed by their ``level`` grid id in ``_g``, re-keyed to coarse cells
+    per rung. ``brute_frame``: flat candidates the brute tail scans.
+    ``persist``: a ``_persister`` — every internal cached frame goes
+    through it."""
+    coarse_level = coarse_level if coarse_level is not None else max(level - 3, 2)
+
+    # tier 1: single-cell equi-join against the index, explode the cell's
+    # struct array AFTER the join (join output stays one row per point;
+    # the explosion feeds straight into a map-side-partial min — all of it
+    # whole-stage codegen; higher-order array functions are interpreted in
+    # Spark and benchmarked 10× slower here), then min(struct(c2, way_id))
+    # grouped by the point's carried columns. The point's cell comes from
+    # grid_expr_from_xyz over the already-computed px/py/pz — pure JVM, so
+    # the RECURRING assign path runs zero Python (the numpy ring UDF below
+    # touches only the ~3% escapee slice); measured, this lifts the leg's
+    # scaling ceiling from the UDF-mix control to the codegen controls.
+    p_base = _with_xyz(points.select("point_id", "lat", "lon"), "lat", "lon", "p")
+    p = p_base.withColumn(
+        "cell", grid_expr_from_xyz(F.col("px"), F.col("py"), F.col("pz"), level)
+    )
+    # NARROW aggregate + cache: group by (point_id, cell) only — point_id
+    # is unique per point (documented input contract), so the extra carried
+    # columns the agg used to group by were pure key-width overhead, and
+    # dropping them shrinks the cached tier-1 frame from 7 columns + struct
+    # to 3 (measured: the wide frame's columnar-cache build cost ~4× the
+    # agg's own compute). The escapee slice re-acquires lat/lon/xyz below
+    # via a broadcast join back to the points frame — one extra cheap scan
+    # charged only to the ~3% slice.
+    t1 = persist(
+        p.join(index, "cell", "left")
+        .select(
+            "point_id", "cell", "px", "py", "pz",
+            F.explode_outer("vs").alias("v"),
+        )
+        .select(
+            "point_id", "cell",
+            F.struct(
+                dist(lambda name: F.col(f"v.{name}")).alias("c2"),
+                F.col("v.way_id").alias("way_id"),
+            ).alias("m"),
+        )
+        .groupBy("point_id", "cell")
+        .agg(F.min("m").alias("best"))
+    )
+    thr1 = _accept_chord2(tier_factor, level)
+    # coalesce(False): a point with NO candidates has best.c2 null — it
+    # must ESCALATE, not vanish through a three-valued-logic filter pair
+    accept1 = (
+        F.coalesce(F.col("best.c2") < thr1, F.lit(False))
+        & ~is_corner_cell(F.col("cell"), level)
+    )
+    out_cols = lambda df: df.select(
+        "point_id",
+        F.col("best.way_id").alias("way_id"),
+        _chord2_to_m(F.col("best.c2")).alias("dist_m"),
+    )
+    ok1 = out_cols(t1.filter(accept1))
+
+    sel = ("point_id", "way_id", "dist_m")
+    outs = [ok1.select(*sel)]
+    esc_cols = ("point_id", "lat", "lon", "px", "py", "pz", "cell")
+    # count the escapee ids BEFORE the enrichment join so every broadcast
+    # hint below is gated on a known size (t1 is persisted — the count is
+    # a cheap cache scan; the join is inner on unique point_id, so the
+    # enriched count is identical)
+    esc_ids = persist(t1.filter(~accept1).select("point_id", "cell"))
+    n_esc = esc_ids.count()
+    esc = persist(
+        _maybe_broadcast(esc_ids, n_esc, _ESC_BROADCAST_MAX)
+        .join(p_base, "point_id")
+        .select(*esc_cols)
+    )
+
+    # escalation ladder: broadcast the (small) escalated point set,
+    # ring-expanded at a coarser level (UDF wrap only on this small side),
+    # against the CACHED candidate frame re-keyed by JVM bit shifts — no
+    # second candidate-side Python pass. The FIRST rung is d=1 (level-1):
+    # escapees overwhelmingly just miss the tight tier-1 bound rather than
+    # sit in empty space (measured 108,977/109,019 on the bench corpus),
+    # and the d=1 ring has 16× fewer sub-cells than a d=3 jump — 11M
+    # candidate pairs vs 183M, collapsing the dominant rung's cost. The
+    # remaining rungs grow the radius 8× per step (d=3) as before, so
+    # genuinely isolated points still converge in O(log) rungs; cheap
+    # existence probes on the persisted rungs short-circuit the ladder.
+    # Every rung's accepted best is the GLOBAL argmin (the ring bound
+    # proof is per-rung), so the ladder shape never changes results.
+    rungs = []
+    if level - 1 > coarse_level and level - 1 >= 2:
+        rungs.append(level - 1)
+    c = coarse_level
+    while True:
+        rungs.append(c)
+        if c <= 4:
+            break
+        c = max(c - 3, 4)
+    for coarse in rungs:
+        if n_esc == 0:
+            return _union_all(outs)
+        if n_esc <= _BRUTE_CUTOVER:
+            # a rung costs a full cached-candidate re-key scan + probe join
+            # (~O(n_candidates) floor) no matter how few escapees remain;
+            # once the population is this small the one-shot brute tail is
+            # cheaper than ANY further rung — skip the rest of the ladder
+            break
+        e = esc.select(
+            "point_id", "px", "py", "pz",
+            is_corner_cell(
+                coarse_cell_expr(F.col("cell"), level, coarse), coarse
+            ).alias("corner"),
+            F.explode(
+                ring_grid_udf(coarse)(F.col("lat"), F.col("lon"))
+            ).alias("ccell"),
+        )
+        vc = rung_frame.withColumn(
+            "ccell", coarse_cell_expr(F.col("_g"), level, coarse)
+        )
+        tk = persist(
+            vc.join(_maybe_broadcast(e, n_esc, _RING_BROADCAST_MAX), "ccell")
+            .select(
+                "point_id", "corner",
+                F.struct(
+                    dist(F.col).alias("c2"), F.col("way_id").alias("way_id")
+                ).alias("m"),
+            )
+            .groupBy("point_id", "corner")
+            .agg(F.min("m").alias("best"))
+        )
+        thr = _accept_chord2(rung_factor, coarse)
+        ok = tk.filter(~F.col("corner") & (F.col("best.c2") < thr))
+        outs.append(out_cols(ok).select(*sel))
+        # the accepted-id side is ≤ the escapee count — hint it small only
+        # when that bound is known-broadcastable, so the per-rung anti-join
+        # never shuffles the escapee frame in the common case
+        esc = persist(
+            esc.join(
+                _maybe_broadcast(ok.select("point_id"), n_esc, _ESC_BROADCAST_MAX),
+                "point_id",
+                "left_anti",
+            )
+        )
+        n_esc = esc.count()
+
+    # brute tail: the early-cutover remainder, or nothing within
+    # ~0.95·min_edge(4) ≈ 350 km (open ocean) / a cube-corner straggler —
+    # broadcast NL join over the cached candidates
+    if n_esc == 0:
+        return _union_all(outs)
+    t3 = (
+        brute_frame.crossJoin(F.broadcast(esc.select("point_id", "px", "py", "pz")))
+        .select("point_id", dist(F.col).alias("c2"), "way_id")
+        .groupBy("point_id")
+        .agg(F.min(F.struct("c2", "way_id")).alias("best"))
+    )
+    outs.append(out_cols(t3).select(*sel))
+    return _union_all(outs)
+
+
+def _union_all(frames):
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
+
+
 def knn_nearest_way(
     points: DataFrame,
     resolved_ways: DataFrame | None,
@@ -334,202 +563,15 @@ def knn_nearest_way(
         level, verts_g, index = build_knn_index(
             resolved_ways, level, materialize_dir
         )
-    coarse_level = coarse_level if coarse_level is not None else max(level - 3, 2)
-
-    def _persist(df):
-        df = df.persist()
-        if track_persists is not None:
-            track_persists.append(df)
-        return df
-
-    # tier 1: single-cell equi-join against the index, explode the cell's
-    # struct array AFTER the join (join output stays one row per point;
-    # the explosion feeds straight into a map-side-partial min — all of it
-    # whole-stage codegen; higher-order array functions are interpreted in
-    # Spark and benchmarked 10× slower here), then min(struct(c2, way_id))
-    # grouped by the point's carried columns. The point's cell comes from
-    # grid_expr_from_xyz over the already-computed px/py/pz — pure JVM, so
-    # the RECURRING assign path runs zero Python (the numpy ring UDF below
-    # touches only the ~3% escapee slice); measured, this lifts the leg's
-    # scaling ceiling from the UDF-mix control to the codegen controls.
-    p_base = _with_xyz(points.select("point_id", "lat", "lon"), "lat", "lon", "p")
-    p = p_base.withColumn(
-        "cell", grid_expr_from_xyz(F.col("px"), F.col("py"), F.col("pz"), level)
+    return _tiered_nearest(
+        points, level, coarse_level, index,
+        dist=_vertex_chord2,
+        tier_factor=_ACCEPT_FACTOR,
+        rung_factor=_ACCEPT_FACTOR,
+        rung_frame=verts_g,
+        brute_frame=verts_g,
+        persist=_persister(track_persists),
     )
-    c2v = _chord2(
-        F.col("px"), F.col("py"), F.col("pz"),
-        F.col("v.vx"), F.col("v.vy"), F.col("v.vz"),
-    )
-    # NARROW aggregate + cache: group by (point_id, cell) only — point_id
-    # is unique per point (documented input contract), so the extra carried
-    # columns the agg used to group by were pure key-width overhead, and
-    # dropping them shrinks the cached tier-1 frame from 7 columns + struct
-    # to 3 (measured: the wide frame's columnar-cache build cost ~4× the
-    # agg's own compute). The escapee slice re-acquires lat/lon/xyz below
-    # via a broadcast join back to the points frame — one extra cheap scan
-    # charged only to the ~3% slice.
-    t1 = _persist(
-        p.join(index, "cell", "left")
-        .select(
-            "point_id", "cell", "px", "py", "pz",
-            F.explode_outer("vs").alias("v"),
-        )
-        .select(
-            "point_id", "cell",
-            F.struct(c2v.alias("c2"), F.col("v.way_id").alias("way_id")).alias("m"),
-        )
-        .groupBy("point_id", "cell")
-        .agg(F.min("m").alias("best"))
-    )
-    thr1 = _accept_chord2(level)
-    # coalesce(False): a point with NO candidates has best.c2 null — it
-    # must ESCALATE, not vanish through a three-valued-logic filter pair
-    accept1 = (
-        F.coalesce(F.col("best.c2") < thr1, F.lit(False))
-        & ~is_corner_cell(F.col("cell"), level)
-    )
-    out_cols = lambda df: df.select(
-        "point_id",
-        F.col("best.way_id").alias("way_id"),
-        _chord2_to_m(F.col("best.c2")).alias("dist_m"),
-    )
-    ok1 = out_cols(t1.filter(accept1))
-
-    sel = ("point_id", "way_id", "dist_m")
-    outs = [ok1.select(*sel)]
-    esc_cols = ("point_id", "lat", "lon", "px", "py", "pz", "cell")
-    # count the escapee ids BEFORE the enrichment join so every broadcast
-    # hint below is gated on a known size (t1 is persisted — the count is
-    # a cheap cache scan; the join is inner on unique point_id, so the
-    # enriched count is identical)
-    esc_ids = _persist(t1.filter(~accept1).select("point_id", "cell"))
-    n_esc = esc_ids.count()
-    esc = _persist(
-        _maybe_broadcast(esc_ids, n_esc, _ESC_BROADCAST_MAX)
-        .join(p_base, "point_id")
-        .select(*esc_cols)
-    )
-
-    # escalation ladder: broadcast the (small) escalated point set,
-    # ring-expanded at a coarser level (UDF wrap only on this small side),
-    # against the CACHED vertex frame re-keyed by JVM bit shifts — no
-    # second vertex-side Python pass. The FIRST rung is d=1 (level-1):
-    # escapees overwhelmingly just miss the tight tier-1 bound rather than
-    # sit in empty space (measured 108,977/109,019 on the bench corpus),
-    # and the d=1 ring has 16× fewer sub-cells than a d=3 jump — 11M
-    # candidate pairs vs 183M, collapsing the dominant rung's cost. The
-    # remaining rungs grow the radius 8× per step (d=3) as before, so
-    # genuinely isolated points still converge in O(log) rungs; cheap
-    # existence probes on the persisted rungs short-circuit the ladder.
-    # Every rung's accepted best is the GLOBAL argmin (the ring bound
-    # proof is per-rung), so the ladder shape never changes results.
-    c2r = _chord2(
-        F.col("px"), F.col("py"), F.col("pz"),
-        F.col("vx"), F.col("vy"), F.col("vz"),
-    )
-    rungs = []
-    if level - 1 > coarse_level and level - 1 >= 2:
-        rungs.append(level - 1)
-    c = coarse_level
-    while True:
-        rungs.append(c)
-        if c <= 4:
-            break
-        c = max(c - 3, 4)
-    for coarse in rungs:
-        if n_esc == 0:
-            return _union_all(outs)
-        if n_esc <= _BRUTE_CUTOVER:
-            # a rung costs a full cached-vertex re-key scan + probe join
-            # (~O(n_verts) floor) no matter how few escapees remain; once
-            # the population is this small the one-shot brute tail is
-            # cheaper than ANY further rung — skip the rest of the ladder
-            break
-        e = esc.select(
-            "point_id", "px", "py", "pz",
-            is_corner_cell(
-                coarse_cell_expr(F.col("cell"), level, coarse), coarse
-            ).alias("corner"),
-            F.explode(
-                ring_grid_udf(coarse)(F.col("lat"), F.col("lon"))
-            ).alias("ccell"),
-        )
-        vc = verts_g.withColumn(
-            "ccell", coarse_cell_expr(F.col("_g"), level, coarse)
-        )
-        tk = _persist(
-            vc.join(_maybe_broadcast(e, n_esc, _RING_BROADCAST_MAX), "ccell")
-            .select(
-                "point_id", "corner",
-                F.struct(c2r.alias("c2"), F.col("way_id").alias("way_id")).alias("m"),
-            )
-            .groupBy("point_id", "corner")
-            .agg(F.min("m").alias("best"))
-        )
-        thr = _accept_chord2(coarse)
-        ok = tk.filter(~F.col("corner") & (F.col("best.c2") < thr))
-        outs.append(out_cols(ok).select(*sel))
-        # the accepted-id side is ≤ the escapee count — hint it small only
-        # when that bound is known-broadcastable, so the per-rung anti-join
-        # never shuffles the escapee frame in the common case
-        esc = _persist(
-            esc.join(
-                _maybe_broadcast(ok.select("point_id"), n_esc, _ESC_BROADCAST_MAX),
-                "point_id",
-                "left_anti",
-            )
-        )
-        n_esc = esc.count()
-
-    # brute tail: the early-cutover remainder, or nothing within
-    # ~0.95·min_edge(4) ≈ 350 km (open ocean) / a cube-corner straggler —
-    # broadcast NL join over the cached vertices
-    if n_esc == 0:
-        return _union_all(outs)
-    c2 = _chord2(
-        F.col("px"), F.col("py"), F.col("pz"),
-        F.col("vx"), F.col("vy"), F.col("vz"),
-    )
-    t3 = (
-        verts_g.crossJoin(F.broadcast(esc.select("point_id", "px", "py", "pz")))
-        .select("point_id", c2.alias("c2"), "way_id")
-        .groupBy("point_id")
-        .agg(F.min(F.struct("c2", "way_id")).alias("best"))
-    )
-    outs.append(out_cols(t3).select(*sel))
-    return _union_all(outs)
-
-
-def _union_all(frames):
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# G5b — segment-distance kNN: nearest point on any way SEGMENT (great-circle
-# arc), not just the nearest vertex. Same tiered architecture; the index
-# registers each segment at ≤½-min-edge spaced sample points along its
-# chord, so a long segment crossing a cell far from both endpoints is still
-# a candidate there (the failure mode a vertex-only registration has).
-#
-# Soundness of the acceptance bound: the arc is sampled at chord spacing
-# piece ≤ 0.5·min_edge(level); any arc point lies ≤ piece/2 from a sample.
-# If every sample of a segment is outside p's wrapped ring, then (validated
-# ring property, ≥1.037·min_edge) its nearest arc point is ≥ 1.037·min_edge
-# − piece/2 ≥ 0.78·min_edge away — so accepting only when
-# best < 0.7·min_edge(level) is exact. Escalation rungs reuse the fine
-# samples at coarse cells: piece is ≪ min_edge(coarse), bound factor 0.85.
-# ---------------------------------------------------------------------------
-
-_SEG_ACCEPT_FACTOR = 0.7
-_RUNG_SEG_FACTOR = 0.85
-
-
-def _seg_chord2(thr_rad_factor: float, level: int) -> float:
-    theta = thr_rad_factor * _MIN_EDGE_RAD / (1 << level)
-    return (2.0 * math.sin(theta / 2.0)) ** 2
 
 
 def way_segments(resolved_ways: DataFrame) -> DataFrame:
@@ -549,12 +591,14 @@ def way_segments(resolved_ways: DataFrame) -> DataFrame:
     return _with_xyz(segs, "blat", "blon", "b")
 
 
-def _point_seg_chord2(px, py, pz):
-    """Squared-chord distance from P to the great-circle arc A→B, as pure
-    column math (hand-expanded cross/dot products; zero-length segments
-    fall back to the endpoint distance)."""
-    ax, ay, az = F.col("ax"), F.col("ay"), F.col("az")
-    bx, by, bz = F.col("bx"), F.col("by"), F.col("bz")
+def _point_seg_chord2(c):
+    """Squared-chord distance from P (px, py, pz) to the great-circle arc
+    A→B whose endpoint fields ``c(name)`` returns, as pure column math
+    (hand-expanded cross/dot products; zero-length segments fall back to
+    the endpoint distance)."""
+    px, py, pz = F.col("px"), F.col("py"), F.col("pz")
+    ax, ay, az = c("ax"), c("ay"), c("az")
+    bx, by, bz = c("bx"), c("by"), c("bz")
     nx = ay * bz - az * by
     ny = az * bx - ax * bz
     nz = ax * by - ay * bx
@@ -635,142 +679,25 @@ def knn_nearest_way_segments(
 ) -> DataFrame:
     """points × ways → (point_id, way_id, dist_m) where dist is to the
     nearest point ON the way's polyline (great-circle segments), exact,
-    ties on way_id. Same tier/ladder shape as the vertex variant.
+    ties on way_id. Same tiered search as the vertex variant.
 
     ``track_persists``: as in :func:`knn_nearest_way` — receives every
-    frame this call persists so repeated callers can free them."""
-
-    def _persist(df):
-        df = df.persist()
-        if track_persists is not None:
-            track_persists.append(df)
-        return df
-
-    segs = _persist(way_segments(resolved_ways))
+    frame this call persists (segments and index included) so repeated
+    callers can free them."""
+    persist = _persister(track_persists)
+    segs = persist(way_segments(resolved_ways))
     if level is None:
         verts = way_vertices(resolved_ways)
         level = pick_level(_with_xyz(verts, "vlat", "vlon", "v"))
-    coarse_level = coarse_level if coarse_level is not None else max(level - 3, 2)
-
-    index = _persist(build_segment_cell_index(segs, level))
-
-    # same hot-path shape as the vertex variant: JVM grid expr for the
-    # point cell (zero Python on the recurring path), NARROW (point_id,
-    # cell) agg keys + cache, broadcast re-enrichment of the escapee
-    # slice, d=1 first rung, broadcast anti-joins, early brute cutover.
-    p_base = _with_xyz(points.select("point_id", "lat", "lon"), "lat", "lon", "p")
-    p = p_base.withColumn(
-        "cell", grid_expr_from_xyz(F.col("px"), F.col("py"), F.col("pz"), level)
+    index = persist(build_segment_cell_index(segs, level))
+    return _tiered_nearest(
+        points, level, coarse_level, index,
+        dist=_point_seg_chord2,
+        tier_factor=_SEG_ACCEPT_FACTOR,
+        rung_factor=_RUNG_SEG_FACTOR,
+        # one row per (cell, registered segment): the rungs re-key the
+        # index's registrations, the same candidates tier 1 explodes
+        rung_frame=index.select(F.col("cell").alias("_g"), F.inline("vs")),
+        brute_frame=segs,
+        persist=persist,
     )
-    seg_cols = ("ax", "ay", "az", "bx", "by", "bz")
-    px, py, pz = F.col("px"), F.col("py"), F.col("pz")
-
-    def best_from(joined):
-        ex = joined.select(
-            "point_id", "px", "py", "pz", "cell",
-            F.explode_outer("vs").alias("v"),
-        ).select(
-            "point_id", "px", "py", "pz", "cell",
-            *[F.col(f"v.{c}").alias(c) for c in seg_cols],
-            F.col("v.way_id").alias("way_id"),
-        )
-        m = F.struct(
-            _point_seg_chord2(px, py, pz).alias("c2"),
-            F.col("way_id").alias("way_id"),
-        )
-        return (
-            ex.select("point_id", "cell", m.alias("m"))
-            .groupBy("point_id", "cell")
-            .agg(F.min("m").alias("best"))
-        )
-
-    t1 = _persist(best_from(p.join(index, "cell", "left")))
-    thr1 = _seg_chord2(_SEG_ACCEPT_FACTOR, level)
-    accept1 = (
-        F.coalesce(F.col("best.c2") < thr1, F.lit(False))
-        & ~is_corner_cell(F.col("cell"), level)
-    )
-    out_cols = lambda df: df.select(
-        "point_id",
-        F.col("best.way_id").alias("way_id"),
-        _chord2_to_m(F.col("best.c2")).alias("dist_m"),
-    )
-    sel = ("point_id", "way_id", "dist_m")
-    outs = [out_cols(t1.filter(accept1)).select(*sel)]
-    # same gated-broadcast discipline as knn_nearest_way: size first
-    esc_ids = _persist(t1.filter(~accept1).select("point_id", "cell"))
-    n_esc = esc_ids.count()
-    esc = _persist(
-        _maybe_broadcast(esc_ids, n_esc, _ESC_BROADCAST_MAX)
-        .join(p_base, "point_id")
-        .select("point_id", "lat", "lon", "px", "py", "pz", "cell")
-    )
-
-    rungs = []
-    if level - 1 > coarse_level and level - 1 >= 2:
-        rungs.append(level - 1)
-    c = coarse_level
-    while True:
-        rungs.append(c)
-        if c <= 4:
-            break
-        c = max(c - 3, 4)
-    for coarse in rungs:
-        if n_esc == 0:
-            return _union_all(outs)
-        if n_esc <= _BRUTE_CUTOVER:
-            break
-        e = esc.select(
-            "point_id", "px", "py", "pz",
-            is_corner_cell(
-                coarse_cell_expr(F.col("cell"), level, coarse), coarse
-            ).alias("corner"),
-            F.explode(
-                ring_grid_udf(coarse)(F.col("lat"), F.col("lon"))
-            ).alias("ccell"),
-        )
-        idx_c = index.withColumn(
-            "ccell", coarse_cell_expr(F.col("cell"), level, coarse)
-        )
-        ex = idx_c.join(_maybe_broadcast(e, n_esc, _RING_BROADCAST_MAX), "ccell").select(
-            "point_id", "corner", "px", "py", "pz", F.explode("vs").alias("v")
-        ).select(
-            "point_id", "corner", "px", "py", "pz",
-            *[F.col(f"v.{c}").alias(c) for c in seg_cols],
-            F.col("v.way_id").alias("way_id"),
-        )
-        m = F.struct(
-            _point_seg_chord2(px, py, pz).alias("c2"),
-            F.col("way_id").alias("way_id"),
-        )
-        tk = _persist(
-            ex.select("point_id", "corner", m.alias("m"))
-            .groupBy("point_id", "corner")
-            .agg(F.min("m").alias("best"))
-        )
-        thr = _seg_chord2(_RUNG_SEG_FACTOR, coarse)
-        ok = tk.filter(~F.col("corner") & (F.col("best.c2") < thr))
-        outs.append(out_cols(ok).select(*sel))
-        esc = _persist(
-            esc.join(
-                _maybe_broadcast(ok.select("point_id"), n_esc, _ESC_BROADCAST_MAX),
-                "point_id",
-                "left_anti",
-            )
-        )
-        n_esc = esc.count()
-
-    if n_esc == 0:
-        return _union_all(outs)
-    m = F.struct(
-        _point_seg_chord2(px, py, pz).alias("c2"),
-        F.col("way_id").alias("way_id"),
-    )
-    t3 = (
-        segs.crossJoin(F.broadcast(esc.select("point_id", "px", "py", "pz")))
-        .select("point_id", m.alias("m"))
-        .groupBy("point_id")
-        .agg(F.min("m").alias("best"))
-    )
-    outs.append(out_cols(t3).select(*sel))
-    return _union_all(outs)

@@ -29,6 +29,11 @@ def with_bucket(df: DataFrame, key_col: str, n_buckets: int, out: str = "bucket"
 
 def content_fingerprint(df: DataFrame) -> int:
     """Order-insensitive content hash of all rows (bit-stability checks)."""
+    return rows_and_fingerprint(df)[1]
+
+
+def rows_and_fingerprint(df: DataFrame) -> tuple[int, int]:
+    """(row count, content_fingerprint) from one aggregate — one Spark job."""
     h = df.select(
         F.xxhash64(*[F.col(c).cast("string") for c in df.columns]).alias("h")
     )
@@ -38,7 +43,8 @@ def content_fingerprint(df: DataFrame) -> int:
         F.count("*").alias("n"),
         F.sum((F.abs("h") % F.lit(1_000_000_007)).cast("decimal(38,0)")).alias("m"),
     ).collect()[0]
-    return hash((int(row["s"] or 0), int(row["n"]), int(row["m"] or 0)))
+    n = int(row["n"])
+    return n, hash((int(row["s"] or 0), n, int(row["m"] or 0)))
 
 
 class CheckpointLog:
@@ -139,10 +145,8 @@ def run_bucketed(
         result = transform(part)
         out_path = os.path.join(output_dir, f"bucket={b}")
         result.write.mode("overwrite").parquet(out_path)
-        # count + fingerprint from the written files: one compute pass total
-        written = spark.read.parquet(out_path)
-        n = written.count()
-        fp = content_fingerprint(written)
+        # count + fingerprint of the written files in one aggregate
+        n, fp = rows_and_fingerprint(spark.read.parquet(out_path))
         log.mark(b, n, fp)
         processed.append(b)
         if fail_after is not None and len(processed) >= fail_after:

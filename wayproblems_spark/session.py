@@ -36,12 +36,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # start wide, let AQE coalesce: large intermediate joins (kNN ring
-        # candidates) need more reducers than the steady-state default
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(max(128, shuffle_partitions)),
-        )
         # Arrow for all pandas UDF / mapInArrow boundaries.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -56,10 +56,6 @@ def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
         shift += 7
 
 
-def _zigzag(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
-
-
 def scan_fields(buf: bytes) -> dict[int, list]:
     """One protobuf message → {field_number: [values]}; wire type 0 stays
     an int, wire type 2 stays bytes, wire 5/1 stay raw ints."""

@@ -7,14 +7,12 @@ files = new WARC dumps), the identical extraction/geoparse/rule projection
 
 The node-resolution join is stream-static: the node table is the static
 side (periodically refreshed snapshot), which Structured Streaming supports
-natively for inner joins. Watermarked per-tile counts demonstrate the
-stateful-aggregation path for late data.
+natively for inner joins.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.resolve import drop_invalid_geometry, resolve_locations_mapside
 from ..rules import problems
@@ -43,15 +41,6 @@ def streaming_problems(pages_stream: DataFrame, static_nodes: DataFrame) -> Data
     ways = ways_from_pages(pages_stream).drop("src_url")
     resolved = drop_invalid_geometry(resolve_locations_mapside(ways, static_nodes))
     return problems(resolved)
-
-
-def streaming_page_stats(pages_stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Watermarked windowed rollup of incoming pages (late-data handling)."""
-    return (
-        pages_stream.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", "10 minutes"), "lang")
-        .agg(F.count("*").alias("n_pages"), F.sum(F.length("text")).alias("n_chars"))
-    )
 
 
 def run_to_sink(
