@@ -121,6 +121,92 @@ def test_knn_ladder_rungs_exact(spark):
         assert abs(got[pid][1] - exp[pid][1]) < 1e-6 * max(1.0, exp[pid][1])
 
 
+def cutover_fixture(rng, n_far):
+    """20 short ways over 50.0–50.5°N × 8.0–8.5°E, 50 points exactly on
+    their vertices (distance 0: tier 1 accepts them) and ``n_far`` points
+    over 50.6–50.9°N, at least 11 km from every way: far beyond either
+    variant's tier-1 acceptance radius at level 12, so exactly ``n_far``
+    points escape tier 1."""
+    ways = []
+    for wid in range(1, 21):
+        la, lo = rng.uniform(50.0, 50.5), rng.uniform(8.0, 8.5)
+        ways.append(
+            (wid, [
+                {"lon": float(lo), "lat": float(la)},
+                {"lon": float(lo + rng.uniform(-0.01, 0.01)),
+                 "lat": float(la + rng.uniform(-0.01, 0.01))},
+            ])
+        )
+    pts = [
+        (pid, ways[pid % 20][1][pid % 2]["lat"], ways[pid % 20][1][pid % 2]["lon"])
+        for pid in range(1, 51)
+    ]
+    pts += [
+        (pid, float(rng.uniform(50.6, 50.9)), float(rng.uniform(8.0, 8.5)))
+        for pid in range(1001, 1001 + n_far)
+    ]
+    return ways, pts
+
+
+def test_knn_cutover_boundary_exact_and_freed(spark):
+    """0, _BRUTE_CUTOVER and _BRUTE_CUTOVER + 1 tier-1 escapees for both
+    variants, against the numpy oracles. At or below the cut-over the
+    escapees go straight to the brute tail and nothing past tier 1 is
+    cached; one above it, the escapee slice is cached and the rungs run.
+    Either way, unpersisting ``track_persists`` leaves no cached frame."""
+    from tests.test_knn_segments import _brute as seg_brute
+    from wayproblems_spark.operators.knn import (
+        _SEG_ACCEPT_FACTOR,
+        build_knn_index,
+        knn_nearest_way_segments,
+    )
+
+    jsc = spark.sparkContext._jsc.sc()
+    schema = "way_id long, geom array<struct<lon:double,lat:double>>"
+    for kind, oracle, factor in (
+        ("vertex", _brute, _ACCEPT_FACTOR),
+        ("segment", seg_brute, _SEG_ACCEPT_FACTOR),
+    ):
+        radius_m = 2.0 * EARTH_RADIUS_M * np.arcsin(
+            np.sqrt(_accept_chord2(factor, 12)) / 2.0
+        )
+        n_tracked = {}
+        for n_far in (0, _BRUTE_CUTOVER, _BRUTE_CUTOVER + 1):
+            ways, pts = cutover_fixture(np.random.default_rng(9), n_far)
+            exp = oracle(ways, pts)
+            assert sum(d >= radius_m for _, d in exp.values()) == n_far
+            resolved = spark.createDataFrame(ways, schema)
+            pdf = spark.createDataFrame(pts, "point_id long, lat double, lon double")
+            tracked = []
+            if kind == "vertex":
+                prebuilt = build_knn_index(resolved, 12)
+                prebuilt[1].count()
+                prebuilt[2].count()
+                cached_before = jsc.getPersistentRDDs().size()
+                res = knn_nearest_way(
+                    pdf, None, prebuilt=prebuilt, track_persists=tracked
+                )
+            else:
+                cached_before = jsc.getPersistentRDDs().size()
+                res = knn_nearest_way_segments(
+                    pdf, resolved, level=12, track_persists=tracked
+                )
+            got = {r["point_id"]: (r["way_id"], r["dist_m"]) for r in res.collect()}
+            n_tracked[n_far] = len(tracked)
+            for df in tracked:
+                df.unpersist()
+            assert jsc.getPersistentRDDs().size() == cached_before, (kind, n_far)
+            if kind == "vertex":
+                prebuilt[1].unpersist()
+                prebuilt[2].unpersist()
+            assert set(got) == set(exp), (kind, n_far)
+            for pid in exp:
+                assert got[pid][0] == exp[pid][0], (kind, n_far, pid, got[pid], exp[pid])
+                assert abs(got[pid][1] - exp[pid][1]) < 1e-6 * max(1.0, exp[pid][1])
+        below = n_tracked[_BRUTE_CUTOVER]
+        assert n_tracked[0] == below < n_tracked[_BRUTE_CUTOVER + 1], (kind, n_tracked)
+
+
 def test_ring_covers_all_adjacent_cells_noncorner(spark):
     """Property stressed at face edges: a point whose cell is in p's wrapped
     ring iff within ~1 cell — specifically, any q closer than one min-edge

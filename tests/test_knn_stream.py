@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import time
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from wayproblems_spark.fixtures.pages import generate_corpus, pages_df
@@ -106,3 +107,37 @@ def test_knn_stream_replay_idempotent_and_cache_bounded(spark, tmp_path):
     # a different batch appends its own partition
     fb(pts.limit(250), 8)
     assert spark.read.parquet(out).count() == 450
+
+
+def test_knn_stream_batch_with_new_escapees_compiles_nothing(spark, tmp_path):
+    """A warm micro-batch whose tier-1 escapees are other points than the
+    previous batch's must reuse every generated class: the escapee ids
+    reach the brute tail as data, not as code."""
+    from tests.test_knn_faces import cutover_fixture
+
+    ways, pts = cutover_fixture(np.random.default_rng(9), 4)
+    near, far = pts[:50], pts[50:]
+    resolved = spark.createDataFrame(
+        ways, "way_id long, geom array<struct<lon:double,lat:double>>"
+    )
+    # same-sized batches with 1, 2 and 1 escapees, no point in two batches
+    batches = [
+        near + far[:1],
+        [(pid + 100, la, lo) for pid, la, lo in near[1:]] + far[1:3],
+        [(pid + 200, la, lo) for pid, la, lo in near] + far[3:],
+    ]
+    got = {}
+    fb = knn_foreach_batch(resolved, level=12)
+    fb.sink = lambda df, bid: got.setdefault(bid, df.collect())
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    for bid, rows in enumerate(batches):
+        path = str(tmp_path / f"batch{bid}")
+        spark.createDataFrame(rows, "point_id long, lat double, lon double").coalesce(
+            1
+        ).write.parquet(path)
+        # the first batch also materializes the index, and its measured
+        # size can re-plan the next batch's tier-1 join: measure the third
+        compiled = metric.getCount()
+        fb(spark.read.parquet(path), bid)
+    assert metric.getCount() == compiled
+    assert [len(got[b]) for b in range(3)] == [51, 51, 51]

@@ -59,28 +59,49 @@ def test_grid_expr_matches_numpy(spark):
     and near-pole bands, at coarse/bench/leaf levels. Past the xyz trig,
     every op is correctly-rounded IEEE, so agreement is exact unless the
     JVM/libm cos-sin ulp gap flips a boundary point — none observed on
-    this lattice nor on 3.6M bench points × 5 levels."""
+    this lattice nor on 3.6M bench points × 5 levels.
+
+    The lattice is joined by the points where the face choice ties or
+    flips: face diagonals (|x|=|y|, |y|=|z|, |x|=|z|), cube corners, ±0.0,
+    the poles and lon ±180, each also nudged by ±1e-9°. Both evaluation
+    paths are checked: the optimizer's interpreted folding over a local
+    relation, and whole-stage codegen over a repartitioned one."""
     from wayproblems_spark.operators.cells import grid_expr_from_xyz, latlon_to_grid
     from wayproblems_spark.operators.knn import _with_xyz
 
     lats = np.linspace(-89.999, 89.999, 161)
     lons = np.linspace(-179.999, 179.999, 321)
     grid = [(float(la), float(lo)) for la in lats for lo in lons]
+    corner = math.degrees(math.atan(1.0 / math.sqrt(2.0)))  # 35.26438968°
+    sp_lats = [0.0, -0.0, 45.0, -45.0, corner, -corner, 35.26438968, -35.26438968,
+               90.0, -90.0]
+    sp_lons = [0.0, -0.0, 45.0, -45.0, 90.0, -90.0, 135.0, -135.0, 180.0, -180.0]
+    for la in sp_lats:
+        for lo in sp_lons:
+            for dla in (0.0, 1e-9, -1e-9):
+                for dlo in (0.0, 1e-9, -1e-9):
+                    grid.append((la + dla if dla else la, lo + dlo if dlo else lo))
     df = spark.createDataFrame(grid, "lat double, lon double")
-    p = _with_xyz(df, "lat", "lon", "p")
-    for level in (4, 16, MAX_LEVEL):
-        rows = (
-            p.withColumn(
-                "g", grid_expr_from_xyz(F.col("px"), F.col("py"), F.col("pz"), level)
-            )
-            .select("lat", "lon", "g")
-            .collect()
+
+    def encoded(frame, level):
+        return _with_xyz(frame, "lat", "lon", "p").select(
+            "lat", "lon",
+            grid_expr_from_xyz(F.col("px"), F.col("py"), F.col("pz"), level).alias("g"),
         )
-        la = np.array([r["lat"] for r in rows])
-        lo = np.array([r["lon"] for r in rows])
-        exp = latlon_to_grid(la, lo, level)
-        got = np.array([r["g"] for r in rows])
-        assert (got == exp).all(), f"level {level}: {int((got != exp).sum())} mismatches"
+
+    # the tree every task deserializes: one face CASE per packed field,
+    # never copied into the ST branches (the nested form had 194)
+    plan = encoded(df.repartition(2), 12)._jdf.queryExecution().optimizedPlan()
+    assert plan.toString().count("CASE WHEN") <= 40
+
+    for level in (4, 12, 13, 16, MAX_LEVEL):
+        for frame in (df, df.repartition(2)):
+            rows = encoded(frame, level).collect()
+            la = np.array([r["lat"] for r in rows])
+            lo = np.array([r["lon"] for r in rows])
+            exp = latlon_to_grid(la, lo, level)
+            got = np.array([r["g"] for r in rows])
+            assert (got == exp).all(), f"level {level}: {int((got != exp).sum())} mismatches"
 
 
 def test_parent_expr_matches_numpy(spark):

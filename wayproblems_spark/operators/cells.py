@@ -282,32 +282,26 @@ def grid_expr_from_xyz(x, y, z, level: int):
     magnitude above ulp scale — so candidate sets stay sound and the
     argmin result is unchanged. The canonical cross-engine encoder (the
     one the q13 DuckDB oracle locks) remains `latlon_to_grid`/`grid_udf`.
+
+    Shape: every packed field branches on the major axis and then on its
+    component's sign (the face choice itself), with the ST map inside
+    each arm. A Column is a tree, not a DAG: a sub-expression used twice
+    is copied, so testing a computed `face` in each u/v branch would copy
+    the face CASE into all of them, and each u/v again into the ST
+    branches. The driver analyses this tree and every task deserializes
+    it on each call; test_grid_expr_matches_numpy bounds its size.
     """
     ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    f0 = (
-        F.when(ax >= F.greatest(ay, az), F.lit(0))
-        .when(ay >= az, F.lit(1))
-        .otherwise(F.lit(2))
-    )
-    comp = F.when(f0 == 0, x).when(f0 == 1, y).otherwise(z)
-    face = F.when(comp < 0, f0 + 3).otherwise(f0)
-    # per-face (u, v) — same table as _face_uv
-    u = (
-        F.when(face == 0, y / x)
-        .when(face == 1, -x / y)
-        .when(face == 2, -x / z)
-        .when(face == 3, z / x)
-        .when(face == 4, z / y)
-        .otherwise(-y / z)
-    )
-    v = (
-        F.when(face == 0, z / x)
-        .when(face == 1, z / y)
-        .when(face == 2, -y / z)
-        .when(face == 3, y / x)
-        .when(face == 4, -x / y)
-        .otherwise(-x / z)
-    )
+    x_major = ax >= F.greatest(ay, az)
+    y_major = ay >= az
+
+    def by_face(f0, f1, f2, f3, f4, f5):
+        # faces 0/1/2 are +x/+y/+z, 3/4/5 the negative sides (as _face_uv)
+        return (
+            F.when(x_major, F.when(x < 0, f3).otherwise(f0))
+            .when(y_major, F.when(y < 0, f4).otherwise(f1))
+            .otherwise(F.when(z < 0, f5).otherwise(f2))
+        )
 
     def _st(c):  # quadratic UV→ST (same branches as _uv_to_st)
         return F.when(c >= 0, 0.5 * F.sqrt(1.0 + 3.0 * c)).otherwise(
@@ -320,13 +314,14 @@ def grid_expr_from_xyz(x, y, z, level: int):
         raw = (s * F.lit(float(1 << MAX_LEVEL))).cast("long")
         return F.greatest(F.lit(0).cast("long"), F.least(raw, lim))
 
+    # per-face (u, v), same table as _face_uv, mapped to ST inside each arm
+    s = by_face(*(_st(c) for c in (y / x, -x / y, -x / z, z / x, z / y, -y / z)))
+    t = by_face(*(_st(c) for c in (z / x, z / y, -y / z, y / x, -x / y, -x / z)))
     shift = MAX_LEVEL - level
-    gi = F.shiftright(_ij(_st(u)), shift)
-    gj = F.shiftright(_ij(_st(v)), shift)
     return (
-        F.shiftleft(face.cast("long"), 58)
-        .bitwiseOR(F.shiftleft(gi, 29))
-        .bitwiseOR(gj)
+        by_face(*(F.lit(f << 58) for f in range(6)))
+        .bitwiseOR(F.shiftleft(F.shiftright(_ij(s), shift), 29))
+        .bitwiseOR(F.shiftright(_ij(t), shift))
     )
 
 

@@ -36,7 +36,10 @@ ring-wrap sliver and the tiny escapee ring expansion.
           there (the failure mode a vertex-only registration has).
           One groupBy collapses either side to one row per cell.
   tier 1: each point joins its SINGLE cell against the index — no point
-          explosion, join output is one row per point — then the cell's
+          explosion, join output is one row per point. The prebuilt vertex
+          index is cached sorted by cell within its cell-hash partitions
+          (the materialized form is bucketed and sorted the same way), so
+          the sort-merge join sorts only the point side. Then the cell's
           struct array explodes straight into a map-side-partial
           min(struct(c2, way_id)) grouped by the point's carried columns
           (all whole-stage codegen; interpreted higher-order array
@@ -45,23 +48,34 @@ ring-wrap sliver and the tiny escapee ring expansion.
           in cube-CORNER cells (ring is only 7 cells there; 24 cells per
           level, all mid-ocean on Earth) are never accepted by the bound —
           they escalate regardless.
-  ladder: the (rare) escalated points are BROADCAST, ring-expanded at a
-          coarser level (UDF wrap only on this small side), against the
-          CACHED flat candidate frame (vertices: the vertex frame;
-          segments: the exploded index) re-keyed to coarse cells by JVM
-          bit shifts — map-side hash join, no second candidate-side Python
-          pass — then one tiny per-point min. The FIRST rung is d=1:
-          escapees overwhelmingly just miss the tight tier-1 bound
-          (measured 108,977/109,019 on the bench corpus), and its ring has
-          16× fewer sub-cells than a d=3 jump; later rungs grow the radius
-          8× per step so isolated points converge in O(log) rungs. Every
-          rung's accepted best is the global argmin (the ring-bound proof
-          is per-rung), so the ladder shape never changes results.
-  brute:  once the surviving population drops below _BRUTE_CUTOVER (or
+  escapees: after tier 1 and after each rung one step sizes what is
+          left: it fetches at most _BRUTE_CUTOVER + 1 escapee ids off the
+          persisted frame (a bounded limit + collect_list, one small
+          job). At or below the cut-over those ids are the whole set and
+          go straight to the brute tail; nothing more is cached. Only a
+          larger slice is persisted and counted, and that count gates the
+          rungs' broadcast hints.
+  ladder: more than _BRUTE_CUTOVER escalated points are BROADCAST (when
+          their count allows), ring-expanded at a coarser level (UDF wrap
+          only on this small side), against the CACHED flat candidate
+          frame (vertices: the vertex frame; segments: the exploded index)
+          re-keyed to coarse cells by JVM bit shifts — map-side hash join,
+          no second candidate-side Python pass — then one tiny per-point
+          min. The FIRST rung is d=1: escapees overwhelmingly just miss
+          the tight tier-1 bound (measured 108,977/109,019 on the bench
+          corpus), and its ring has 16× fewer sub-cells than a d=3 jump;
+          later rungs grow the radius 8× per step so isolated points
+          converge in O(log) rungs. Every rung's accepted best is the
+          global argmin (the ring-bound proof is per-rung), so the ladder
+          shape never changes results.
+  brute:  once the escapee step finds at most _BRUTE_CUTOVER left (or
           the ladder exhausts), the remainder is broadcast against the
           candidate set (BroadcastNestedLoopJoin) — exact by construction,
           and bounded: the stream side is one cached candidate scan, the
-          broadcast side is a few hundred points at most.
+          broadcast side is a few hundred points at most. Below the
+          cut-over the points frame is filtered by the fetched ids, held
+          in one array literal: generated code reads it as data, so a
+          micro-batch with other escapees compiles no new class.
 
 Soundness of the acceptance factors:
   vertices, 0.95 at every level: stress sampling across face edges and
@@ -127,7 +141,7 @@ _BRUTE_CUTOVER = 200
 # omitted — AQE still converts the join at runtime if the actual relation
 # is small, and falls back to a shuffle join otherwise (correct either
 # way; the hint only pins the fast plan when it is provably safe).
-_ESC_BROADCAST_MAX = 500_000   # id-width sides (enrichment, anti-join)
+_ESC_BROADCAST_MAX = 500_000   # id-width side (per-rung anti-join)
 _RING_BROADCAST_MAX = 200_000  # ring-exploded probe side (≤16 rows/escapee)
 
 
@@ -324,7 +338,13 @@ def build_knn_index(
         )
     else:
         verts_g = verts_g.persist()
-        index = build_vertex_cell_index(verts_g, level).persist()
+        # sorted within its cell-hash partitions, like the materialized
+        # path: tier 1's sort-merge join then sorts only the point side
+        index = (
+            build_vertex_cell_index(verts_g, level)
+            .sortWithinPartitions("cell")
+            .persist()
+        )
     return level, verts_g, index
 
 
@@ -387,9 +407,8 @@ def _tiered_nearest(
     # columns the agg used to group by were pure key-width overhead, and
     # dropping them shrinks the cached tier-1 frame from 7 columns + struct
     # to 3 (measured: the wide frame's columnar-cache build cost ~4× the
-    # agg's own compute). The escapee slice re-acquires lat/lon/xyz below
-    # via a broadcast join back to the points frame — one extra cheap scan
-    # charged only to the ~3% slice.
+    # agg's own compute). The escapees re-acquire lat/lon/xyz from the
+    # points frame (escapee step below), charged only to the small slice.
     t1 = persist(
         p.join(index, "cell", "left")
         .select(
@@ -422,17 +441,30 @@ def _tiered_nearest(
 
     sel = ("point_id", "way_id", "dist_m")
     outs = [ok1.select(*sel)]
+
+    def escapee_step(left, widen):
+        """Size the escapees ``left`` (off a persisted frame) with one
+        bounded id fetch (module docstring). Above the cut-over, persist
+        and count ``widen(left)``, the columns the rungs read; at or below
+        it, cache nothing and return the points the ids select.
+        -> (escapee frame, count)"""
+        ids = (
+            left.select("point_id").limit(_BRUTE_CUTOVER + 1)
+            .agg(F.collect_list("point_id")).collect()[0][0]
+        )
+        if len(ids) > _BRUTE_CUTOVER:
+            esc = persist(widen(left))
+            return esc, esc.count()
+        if not ids:
+            return None, 0
+        # one array literal, which generated code reads as data: an IN
+        # list would inline each id and recompile for every batch
+        return p_base.filter(F.array_contains(F.lit(ids), F.col("point_id"))), len(ids)
+
     esc_cols = ("point_id", "lat", "lon", "px", "py", "pz", "cell")
-    # count the escapee ids BEFORE the enrichment join so every broadcast
-    # hint below is gated on a known size (t1 is persisted — the count is
-    # a cheap cache scan; the join is inner on unique point_id, so the
-    # enriched count is identical)
-    esc_ids = persist(t1.filter(~accept1).select("point_id", "cell"))
-    n_esc = esc_ids.count()
-    esc = persist(
-        _maybe_broadcast(esc_ids, n_esc, _ESC_BROADCAST_MAX)
-        .join(p_base, "point_id")
-        .select(*esc_cols)
+    esc, n_esc = escapee_step(
+        t1.filter(~accept1).select("point_id", "cell"),
+        lambda df: df.join(p_base, "point_id").select(*esc_cols),
     )
 
     # escalation ladder: broadcast the (small) escalated point set,
@@ -444,8 +476,8 @@ def _tiered_nearest(
     # and the d=1 ring has 16× fewer sub-cells than a d=3 jump — 11M
     # candidate pairs vs 183M, collapsing the dominant rung's cost. The
     # remaining rungs grow the radius 8× per step (d=3) as before, so
-    # genuinely isolated points still converge in O(log) rungs; cheap
-    # existence probes on the persisted rungs short-circuit the ladder.
+    # genuinely isolated points still converge in O(log) rungs; the
+    # escapee step after each rung short-circuits the ladder.
     # Every rung's accepted best is the GLOBAL argmin (the ring bound
     # proof is per-rung), so the ladder shape never changes results.
     rungs = []
@@ -458,8 +490,6 @@ def _tiered_nearest(
             break
         c = max(c - 3, 4)
     for coarse in rungs:
-        if n_esc == 0:
-            return _union_all(outs)
         if n_esc <= _BRUTE_CUTOVER:
             # a rung costs a full cached-candidate re-key scan + probe join
             # (~O(n_candidates) floor) no matter how few escapees remain;
@@ -495,14 +525,14 @@ def _tiered_nearest(
         # the accepted-id side is ≤ the escapee count — hint it small only
         # when that bound is known-broadcastable, so the per-rung anti-join
         # never shuffles the escapee frame in the common case
-        esc = persist(
+        esc, n_esc = escapee_step(
             esc.join(
                 _maybe_broadcast(ok.select("point_id"), n_esc, _ESC_BROADCAST_MAX),
                 "point_id",
                 "left_anti",
-            )
+            ),
+            lambda df: df,
         )
-        n_esc = esc.count()
 
     # brute tail: the early-cutover remainder, or nothing within
     # ~0.95·min_edge(4) ≈ 350 km (open ocean) / a cube-corner straggler —

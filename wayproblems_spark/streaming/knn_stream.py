@@ -2,13 +2,16 @@
 source) to its nearest way, against a STATIC way corpus.
 
 Shape: the tiered kNN operator needs driver actions per batch (the
-escalation ladder's existence probes, the brute-tail short-circuit), so
-it cannot run as a single continuous streaming transformation — the
-standard Spark pattern for that is ``foreachBatch``: the static side
-(grid-keyed vertex frame + per-cell index) is built ONCE with
+escapee step's bounded id fetch after tier 1, and a count per ladder
+rung when more than ``_BRUTE_CUTOVER`` points escape), so it cannot run
+as a single continuous streaming transformation — the standard Spark
+pattern for that is ``foreachBatch``: the static side (grid-keyed vertex
+frame + per-cell index, cached sorted by cell) is built ONCE with
 ``build_knn_index`` and captured by the batch closure; every micro-batch
-then pays only for its own points (tier-1 equi-join against the persisted
-index, escalation only for its own escapees).
+then pays only for its own points (tier-1 sort-merge join that sorts only
+the batch's side, escalation only for its own escapees). A typical batch
+has a handful of escapees: their ids reach the brute tail as data, so a
+warm batch compiles no new generated class.
 
 Delivery semantics are foreachBatch's usual at-least-once at the
 boundary; :func:`exactly_once_parquet_sink` ships the idempotent
