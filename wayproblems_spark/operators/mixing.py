@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .ranking import _toks
 from .sampling import _DENOM, _hash_u32
 
@@ -132,7 +133,8 @@ def mix_sources(
     if use_join_rates is None:
         use_join_rates = len(weights) > 64
     if use_join_rates:
-        rdf = docs.sparkSession.createDataFrame(
+        rdf = local_frame(
+            docs.sparkSession,
             [(s, nf, thr) for s, (nf, thr) in cuts.items()],
             f"{source_col} string, _nf int, _thr long",
         )

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .sampling import _hash_u32
 
 
@@ -79,7 +80,7 @@ def shuffle_corpus(
         acc += row["_n"]
     if not rows:
         return df.withColumn(rank_col, F.lit(None).cast("long"))
-    offs = df.sparkSession.createDataFrame(rows, "_b long, _off long")
+    offs = local_frame(df.sparkSession, rows, "_b long, _off long")
 
     w = Window.partitionBy("_b").orderBy(
         _draw(id_col, salt), F.col(id_col)

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -670,8 +672,8 @@ def pq_topk(
     scored = encoded.select(
         "*", F.posexplode(_adc(F.col("codes"))).alias("_qi", "adc_dist")
     )
-    qmap = spark.createDataFrame(
-        [(int(i), q) for i, q in enumerate(qids.tolist())], f"_qi int, {q_id_col} long"
+    qmap = local_frame(
+        spark, [(int(i), q) for i, q in enumerate(qids.tolist())], f"_qi int, {q_id_col} long"
     )
     scored = scored.join(F.broadcast(qmap), "_qi").drop("_qi", "codes")
     id_col = encoded.columns[0]

@@ -3,8 +3,15 @@ Catalyst projection (SURVEY.md §2.1 P5+P6).
 
 Physical shape: gate filter (pushed to the scan) → a single narrow ``select``
 building an ``array<struct<site,sub,layer,style,problem>>`` of ~230
-``CASE WHEN`` elements → ``explode``. No shuffle, no Python — the entire rule
-evaluation runs inside whole-stage codegen.
+``CASE WHEN`` elements → ``explode``. No shuffle and no Python, but the rule
+evaluation itself is interpreted: the ``filter``/``transform``/``aggregate``
+lambdas are ``CodegenFallback`` expressions, so the executed plan shows
+``Generate explode(filter(concat(...)))`` without a ``*(n)`` whole-stage
+marker; only the projections around it are code-generated. That is the
+cheaper shape here: a rendering without lambdas was tried and got
+whole-stage codegen, but Janino failed to compile the generated method
+(``InternalCompilerException``), Spark fell back to interpretation, and
+the cold job cost more CPU than the interpreted one.
 
 The catalogue has two render targets (``rules.dsl``): the Python oracle
 (``rules.oracle``) and SQL text (``rules.sqlgen``). This module takes the

@@ -11,7 +11,8 @@ for two engines:
   that ``rules.engine.problems`` parses with a single ``F.expr`` call
   instead of building a Column tree one py4j call per node. The text
   mirrors, node for node, the Column tree the engine used to build, so
-  Catalyst optimizes it to the same plan and generates the same code.
+  Catalyst optimizes it to the same plan and evaluates it the same way
+  (interpreted: its lambdas are ``CodegenFallback``; see ``rules.engine``).
 * **DuckDB** (``DUCKDB``) — the q34 oracle. ``catalog_oracle_sql()``
   renders every live emission site (wayproblems.cpp:1441-1546) as a
   UNION ALL branch over the synthesized corpus (``rules.synth``), so the

@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, and ``local_frame``,
+which builds small driver-side frames without starting a Python worker.
 
 Defaults chosen for the 100 TB design point (AQE on, skew-join on,
 partition coalescing on) while staying correct on local[N] test runs.
@@ -8,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -47,3 +49,27 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in field order),
+    typed by ``schema`` (a DDL string or a StructType).
+
+    The rows travel as one Arrow table, which Spark plans as a
+    ``LocalRelation`` for any number of rows, zero included, so running
+    the frame starts no Python worker. A row-list ``createDataFrame``
+    plans a pickled Python RDD instead, and its first job starts a
+    second Python worker pool beside the one the pandas UDFs use.
+    Build every small driver-side lookup frame through this helper.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

@@ -39,6 +39,8 @@ import zlib
 import numpy as np
 import pandas as pd
 
+from ..session import local_frame
+
 # ---------------------------------------------------------------------------
 # varint + field scanning
 # ---------------------------------------------------------------------------
@@ -242,7 +244,8 @@ def _read_frames(spark, path: str):
     index = [b for b in scan_blob_index(path) if b["type"] == "OSMData"]
     if not index:
         raise ValueError(f"no OSMData blobs in {path}")
-    idx_df = spark.createDataFrame(
+    idx_df = local_frame(
+        spark,
         [(path, b["offset"], b["size"]) for b in index],
         "path string, offset long, size long",
     ).repartition(min(len(index), 256))

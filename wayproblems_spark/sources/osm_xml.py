@@ -34,6 +34,7 @@ from xml.sax.saxutils import quoteattr
 
 import pandas as pd
 
+from ..session import local_frame
 from .osm_pbf import NODE_DDL, WAY_DDL
 
 # Attribute sweeps are QUOTE-AWARE (ADVICE r3): a raw '>' or '/>' is legal
@@ -130,8 +131,8 @@ def _ranges_df(spark, path: str, chunk_bytes: int = DEFAULT_CHUNK):
         (path, off, min(off + chunk_bytes, size))
         for off in range(0, max(size, 1), chunk_bytes)
     ]
-    return spark.createDataFrame(
-        ranges, "path string, start long, end long"
+    return local_frame(
+        spark, ranges, "path string, start long, end long"
     ).repartition(min(len(ranges), 256))
 
 

@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
+
 
 class CommitConflict(RuntimeError):
     """The VERSION pointer moved between read and commit (lost race)."""
@@ -272,7 +274,7 @@ def read_snapshot(
         files = [f for f in files if keep(f)]
     schema = StructType.fromJson(json.loads(m["schema"]))
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(*[f["path"] for f in files])
 
 

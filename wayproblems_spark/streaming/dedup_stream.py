@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _minhash_band_buckets, word_shingles
+from ..session import local_frame
 
 
 def _hashed_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
@@ -78,7 +79,7 @@ def _read_state(spark, path: str, like: DataFrame) -> DataFrame:
     schema = StructType(
         list(like.schema.fields) + [StructField("batch_id", IntegerType())]
     )
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def dedup_foreach_batch(

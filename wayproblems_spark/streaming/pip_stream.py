@@ -2,11 +2,14 @@
 Structured-Streaming source) against a STATIC polygon layer.
 
 Shape: same foreachBatch pattern as :mod:`.knn_stream` — the static side
-(cell-bucket + edge broadcast tables) is built ONCE with
-``build_pip_index`` (persisted + materialized, so no per-batch broadcast
-rebuild — VERDICT r4 "wrong #2") and captured by the batch closure;
-every micro-batch then pays only for its own points: one broadcast
-bucket join, one broadcast edge join, one codegen parity aggregate.
+(cell-bucket + edge tables) is built ONCE with ``build_pip_index``
+(persisted + materialized, so no batch re-runs the cover build — VERDICT
+r4 "wrong #2") and captured by the batch closure. The broadcasts are not
+reused: every micro-batch plans its own two ``BroadcastExchange``s, so
+it runs two small jobs that read the cached tables and broadcast them
+again (one task per cached partition), then pays for its own points:
+one broadcast bucket join, one broadcast edge join, one codegen parity
+aggregate.
 Unlike kNN there is no per-batch internal persist to track — the PIP
 operator is a single stateless plan — so the only cache entries alive
 across the stream are the two index frames.

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.zonal import zonal_partials
+from ..session import local_frame
 from .knn_stream import exactly_once_parquet_sink
 
 __all__ = ["zonal_foreach_batch", "zonal_totals"]
@@ -85,7 +86,7 @@ def zonal_totals(
             f"{v}_avg double"
             for v in value_cols
         )
-        return spark.createDataFrame([], ddl)
+        return local_frame(spark, [], ddl)
     aggs = [F.sum("n_points").alias("n_points")]
     for v in value_cols:
         aggs += [
