@@ -64,7 +64,8 @@ def test_local_frame_round_trips_values(spark):
 def test_converted_builders_plan_no_logical_rdd(spark, tmp_path):
     from wayproblems_spark.operators.mixing import mix_sources
     from wayproblems_spark.operators.ordering import shuffle_corpus
-    from wayproblems_spark.operators.pip import build_pip_index, polygon_edges
+    from wayproblems_spark.operators.overlay import build_overlay_index
+    from wayproblems_spark.operators.pip import build_pip_index
     from wayproblems_spark.operators.similarity import build_pq_index, pq_topk
     from wayproblems_spark.sources.osm_pbf import _read_frames, write_pbf
     from wayproblems_spark.sources.osm_xml import _ranges_df
@@ -84,8 +85,11 @@ def test_converted_builders_plan_no_logical_rdd(spark, tmp_path):
     _level, frames["pip.buckets"], frames["pip.edges"] = build_pip_index(
         spark, polys, level=8, distributed=False, persist=False
     )
-    rings = [(1, "admin", [ring], False)]
-    frames["pip.polygon_edges"] = polygon_edges(spark, rings)
+    _level, *overlay = build_overlay_index(
+        spark, polys, level=8, distributed=False, persist=False
+    )
+    for name, f in zip(("buckets", "edges", "reps"), overlay):
+        frames[f"overlay.{name}"] = f
 
     docs = local_frame(
         spark,
@@ -138,14 +142,11 @@ def test_converted_builders_plan_no_logical_rdd(spark, tmp_path):
     prebuilt[1].unpersist()
 
 
-# createDataFrame may build a frame only here: the helper itself, the
-# fixture generator, and the two sites that already ship a pandas frame
-# (Arrow, planned as a LocalRelation)
+# createDataFrame may build a frame only here: the helper itself and the
+# fixture generator
 _ALLOWED = {
     ("session.py", "local_frame"),
     ("fixtures/pages.py", "pages_df"),
-    ("operators/overlay.py", "_rep_points"),
-    ("operators/pip.py", "polygon_cell_buckets"),
 }
 
 

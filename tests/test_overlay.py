@@ -222,12 +222,19 @@ def test_same_layer_unordered_pairs(spark):
 
 
 def test_distributed_build_identical(spark):
-    """build_overlay_index(distributed=True) runs the cover/edge/rep
-    extraction executor-parallel; with an explicit ``samples`` the three
-    tables must be row-identical to the driver-loop build (the pip
+    """build_overlay_index(distributed=True) runs the index kernel
+    executor-parallel; with an explicit ``samples`` the three tables must
+    be row-identical to the driver build (the pip
     test_pip_distributed_build_identical pattern — only where the numpy
-    runs moves)."""
-    from wayproblems_spark.operators.overlay import build_overlay_index
+    runs moves). An empty layer gives empty tables with the declared
+    schemas on both placements."""
+    from pyspark.sql import types as T
+
+    from wayproblems_spark.operators.pip import (
+        _BUCKET_SCHEMA,
+        _EDGE_SCHEMA,
+        _REP_SCHEMA,
+    )
 
     a = _poly_df(spark, LAYER_A, HOLES_A)
     drv = build_overlay_index(
@@ -241,6 +248,14 @@ def test_distributed_build_identical(spark):
         x = sorted(map(tuple, dist[i].collect()))
         assert d == x, f"{name} differ between driver and distributed build"
     unpersist_overlay_index(dist)
+
+    empty = a.where(F.col("poly_id") < 0)
+    want = [T.StructType.fromDDL(d) for d in (_BUCKET_SCHEMA, _EDGE_SCHEMA, _REP_SCHEMA)]
+    for distributed in (False, True):
+        idx = build_overlay_index(spark, empty, level=9, distributed=distributed)
+        assert [f.schema for f in idx[1:]] == want
+        assert [f.count() for f in idx[1:]] == [0, 0, 0]
+        unpersist_overlay_index(idx)
 
 
 def test_bbox_prefilter_keeps_touching_pairs(spark):

@@ -495,13 +495,21 @@ def test_pip_prebuilt_level_packed(spark):
 
 
 def test_pip_distributed_build_identical(spark):
-    """build_pip_index(distributed=True) runs the cover/edge extraction
-    executor-side via mapInPandas; the resulting bucket and edge tables —
-    and therefore the PIP results — must be IDENTICAL to the driver-loop
-    path (same per-polygon kernel, different placement). Exercises holes
-    and an antimeridian wrap polygon so every normalization branch runs
-    on both paths (VERDICT r4 next-round #5)."""
-    from wayproblems_spark.operators.pip import build_pip_index, unpersist_pip_index
+    """build_pip_index(distributed=True) runs the index kernel
+    executor-side via mapInArrow; the resulting bucket and edge tables —
+    and therefore the PIP results — must be IDENTICAL to the driver
+    build (same kernel, different placement). Exercises holes and an
+    antimeridian wrap polygon so every normalization branch runs on both
+    paths (VERDICT r4 next-round #5), and an empty layer, which must give
+    empty tables with the declared schemas on both."""
+    from pyspark.sql import types as T
+
+    from wayproblems_spark.operators.pip import (
+        _BUCKET_SCHEMA,
+        _EDGE_SCHEMA,
+        build_pip_index,
+        unpersist_pip_index,
+    )
 
     outer = [(8.0, 51.0), (9.0, 51.0), (9.0, 52.0), (8.0, 52.0), (8.0, 51.0)]
     hole = [(8.4, 51.4), (8.6, 51.4), (8.6, 51.6), (8.4, 51.6), (8.4, 51.4)]
@@ -527,6 +535,14 @@ def test_pip_distributed_build_identical(spark):
     )
     unpersist_pip_index(dist)
     assert got == [(1, 1, "admin"), (3, 2, "admin"), (4, 2, "admin")]
+
+    empty = polys.where(F.col("poly_id") < 0)
+    want = [T.StructType.fromDDL(_BUCKET_SCHEMA), T.StructType.fromDDL(_EDGE_SCHEMA)]
+    for distributed in (False, True):
+        idx = build_pip_index(spark, empty, level=9, distributed=distributed)
+        assert [f.schema for f in idx[1:]] == want
+        assert [f.count() for f in idx[1:]] == [0, 0]
+        unpersist_pip_index(idx)
 
 
 def test_pip_distributed_build_100k_polys(spark):

@@ -29,7 +29,7 @@ mega-polygon spanning many cells is one task's loop, split upstream
 with adaptive_cell_split if it ever dominates (same skew stance as G7).
 
 Antimeridian: a ring whose lon span exceeds 180° is treated as
-wrapping (the `_normalize_rings` convention): its lons shift to
+wrapping (the `pip.polygon_index_tables` convention): its lons shift to
 [0, 360) for clipping and the emitted `cell_x` indices are mapped back
 to the global grid (requires 360 to be an integer number of cells —
 raised otherwise), so wrap and non-wrap polygons index one graticule.

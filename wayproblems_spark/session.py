@@ -52,8 +52,9 @@ def get_spark(
 
 
 def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
-    """A DataFrame over driver-side ``rows`` (tuples in field order),
-    typed by ``schema`` (a DDL string or a StructType).
+    """A DataFrame over driver-side ``rows`` (tuples in field order, or
+    a ``pyarrow.Table`` in field order), typed by ``schema`` (a DDL
+    string or a StructType).
 
     The rows travel as one Arrow table, which Spark plans as a
     ``LocalRelation`` for any number of rows, zero included, so running
@@ -66,10 +67,11 @@ def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFram
     from pyspark.sql.pandas.types import to_arrow_schema
 
     struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
-    arrow_schema = to_arrow_schema(struct)
-    cols = list(zip(*rows)) or [()] * len(arrow_schema)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
-        schema=arrow_schema,
-    )
-    return spark.createDataFrame(table, struct)
+    if not isinstance(rows, pa.Table):
+        arrow_schema = to_arrow_schema(struct)
+        cols = list(zip(*rows)) or [()] * len(arrow_schema)
+        rows = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(rows, struct)
