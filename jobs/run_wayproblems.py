@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """spark-submit entry point (north_rule: `spark-submit --py-files`).
 
-    spark-submit --py-files wayproblems_spark.zip jobs/run_wayproblems.py \
+    spark-submit --py-files wayproblems_spark.zip \
+        --conf spark.driver.defaultJavaOptions=-XX:CICompilerCount=2 \
+        jobs/run_wayproblems.py \
         --pages /data/pages_parquet --out /data/wayproblems_out \
         [--buckets 64] [--resume] [--tile-z 12] [--sqlite]
 
@@ -16,6 +18,11 @@ geoparse → node resolution → the full rule catalogue, writes:
   out/meta.json    style/layer presentation metadata
   out/checkpoints/ per-bucket lineage log (resume with --resume)
   stdout           one reference-format log line per problem (optional)
+
+The job builds its session with the bare builder, so it does not get
+``session.get_spark``'s driver JIT setting; pass it with ``--conf`` as
+above (one C2 compiler thread: most of a short job's driver CPU goes to
+the JIT compiling Spark's own code, see ``get_spark``).
 
 Packaging helper: `python jobs/run_wayproblems.py --make-zip` writes
 wayproblems_spark.zip next to the repo for --py-files.

@@ -29,6 +29,21 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def persisted_ids(spark):
+    """A callable returning the ids of the RDDs cached right now. Cache
+    checks compare these SETS ("no id the call persisted survives it"),
+    not counts: Spark's ContextCleaner unpersists earlier tests'
+    unreachable frames asynchronously, so a count can fall mid-test."""
+
+    def ids():
+        # getPersistentRDDs() returns a snapshot copy of the map
+        keys = spark.sparkContext._jsc.sc().getPersistentRDDs().keys()
+        return {int(k) for k in keys.mkString(",").split(",") if k}
+
+    return ids
+
+
 def mk_way(way_id, tags, nodes=(1, 2), version=1, changeset=100, uid=7, user="tester", ts=TS):
     return (way_id, version, changeset, uid, user, ts, list(nodes), dict(tags))
 

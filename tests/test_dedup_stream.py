@@ -77,7 +77,7 @@ def test_dedup_stream_matches_batch(spark, tmp_path):
     assert sorted(got) == expected
 
 
-def test_dedup_stream_replay_idempotent_and_cache_flat(spark, tmp_path):
+def test_dedup_stream_replay_idempotent_and_cache_flat(spark, tmp_path, persisted_ids):
     docs = _corpus(spark).toPandas().sort_values("doc_id").reset_index(drop=True)
     half = len(docs) // 2
     b0 = spark.createDataFrame(docs.iloc[:half])
@@ -88,18 +88,10 @@ def test_dedup_stream_replay_idempotent_and_cache_flat(spark, tmp_path):
     fb = dedup_foreach_batch(state, jaccard_threshold=0.5)
     fb.sink = exactly_once_parquet_sink(out)
 
-    # cache-flat check via RDD-id SETS, not counts: Spark's ContextCleaner
-    # unpersists earlier tests' unreachable frames asynchronously, so a
-    # count captured here can legitimately DECREASE mid-test — what must
-    # hold is that no id persisted by fb() survives it
-    def cached_ids():
-        m = spark.sparkContext._jsc.sc().getPersistentRDDs()
-        return {it.next()._1() for it in [m.iterator()] for _ in range(m.size())}
-
-    cached_before = cached_ids()
+    cached_before = persisted_ids()
     fb(b0, 0)
     fb(b1, 1)
-    assert cached_ids() <= cached_before  # state is disk, nothing new cached
+    assert persisted_ids() <= cached_before  # state is disk, nothing new cached
 
     once = sorted(map(tuple, spark.read.parquet(out).collect()))
     docs_rows = spark.read.parquet(os.path.join(state, "docs")).count()
@@ -114,7 +106,7 @@ def test_dedup_stream_replay_idempotent_and_cache_flat(spark, tmp_path):
     again = sorted(map(tuple, spark.read.parquet(out).collect()))
     assert again == once
     assert spark.read.parquet(os.path.join(state, "docs")).count() == len(docs)
-    assert cached_ids() <= cached_before
+    assert persisted_ids() <= cached_before
 
 
 def test_dedup_state_compaction(spark, tmp_path):

@@ -76,7 +76,7 @@ def test_enrich_stream_matches_batch(spark, tmp_path):
     assert sorted(got) == expected
 
 
-def test_enrich_stream_replay_idempotent_and_cache_flat(spark, tmp_path):
+def test_enrich_stream_replay_idempotent_and_cache_flat(spark, tmp_path, persisted_ids):
     left, dim = _frames(spark)
     out = str(tmp_path / "enriched")
     fb = asof_foreach_batch(dim, on="k", right_cols=["r_id"])
@@ -84,18 +84,17 @@ def test_enrich_stream_replay_idempotent_and_cache_flat(spark, tmp_path):
     try:
         batch = left.limit(80)
         fb(batch, 7)
-        jsc = spark.sparkContext._jsc.sc()
-        cached = jsc.getPersistentRDDs().size()
+        cached = persisted_ids()
         once = spark.read.parquet(out).drop("batch_id").collect()
         assert len(once) == 80
 
         fb(batch, 7)  # redelivery of the same batch id
-        assert jsc.getPersistentRDDs().size() == cached
+        assert persisted_ids() <= cached
         again = spark.read.parquet(out).drop("batch_id").collect()
         assert sorted(map(tuple, again)) == sorted(map(tuple, once))
 
         fb(left.limit(120), 8)  # new batch appends; cache still flat
-        assert jsc.getPersistentRDDs().size() == cached
+        assert persisted_ids() <= cached
         assert spark.read.parquet(out).count() == 80 + 120
     finally:
         fb.dim.unpersist()

@@ -69,7 +69,7 @@ def test_knn_stream_matches_batch(spark, tmp_path):
     assert got == expected and len(got) > 100
 
 
-def test_knn_stream_replay_idempotent_and_cache_bounded(spark, tmp_path):
+def test_knn_stream_replay_idempotent_and_cache_bounded(spark, tmp_path, persisted_ids):
     """(a) Replaying a micro-batch with the same batch_id through
     exactly_once_parquet_sink must not duplicate rows (at-least-once →
     exactly-once in the written table); (b) per-batch internal persists
@@ -93,13 +93,12 @@ def test_knn_stream_replay_idempotent_and_cache_bounded(spark, tmp_path):
 
     batch = pts.limit(200)
     fb(batch, 7)
-    jsc = spark.sparkContext._jsc.sc()
-    cached_after_first = jsc.getPersistentRDDs().size()
+    cached_after_first = persisted_ids()
     once = spark.read.parquet(out).drop("batch_id").collect()
 
     # replay the SAME batch id (simulates post-failure redelivery)
     fb(batch, 7)
-    assert jsc.getPersistentRDDs().size() == cached_after_first  # no growth
+    assert persisted_ids() <= cached_after_first  # no growth
     again = spark.read.parquet(out).drop("batch_id").collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, once))
     assert len(once) == 200
@@ -111,24 +110,34 @@ def test_knn_stream_replay_idempotent_and_cache_bounded(spark, tmp_path):
 
 def test_knn_stream_batch_with_new_escapees_compiles_nothing(spark, tmp_path):
     """A warm micro-batch whose tier-1 escapees are other points than the
-    previous batch's must reuse every generated class: the escapee ids
-    reach the brute tail as data, not as code."""
+    previous batch's must reuse every generated class, through the
+    exactly-once sink: the escapee ids reach the brute tail as data, the
+    escapee step's bounded fetch is a top-k, not a bare limit() (whose
+    generated code Spark names per plan), and the batch id is a path,
+    not a column. Batches hold more than _BRUTE_CUTOVER + 1 points: on
+    51-point batches a bare limit() compiled nothing new either, so a
+    batch that small would not see it."""
     from tests.test_knn_faces import cutover_fixture
+    from wayproblems_spark.operators.knn import _BRUTE_CUTOVER
+    from wayproblems_spark.streaming.knn_stream import exactly_once_parquet_sink
 
     ways, pts = cutover_fixture(np.random.default_rng(9), 4)
     near, far = pts[:50], pts[50:]
     resolved = spark.createDataFrame(
         ways, "way_id long, geom array<struct<lon:double,lat:double>>"
     )
-    # same-sized batches with 1, 2 and 1 escapees, no point in two batches
+    # batches of 5 × 50 on-vertex points (fresh ids per batch) plus 1, 2
+    # and 1 escapees, no point in two batches
+    n_near = 5 * len(near)
     batches = [
-        near + far[:1],
-        [(pid + 100, la, lo) for pid, la, lo in near[1:]] + far[1:3],
-        [(pid + 200, la, lo) for pid, la, lo in near] + far[3:],
+        [(100_000 * (b + 1) + 1000 * k + pid, la, lo) for k in range(5)
+         for pid, la, lo in near] + escapees
+        for b, escapees in enumerate([far[:1], far[1:3], far[3:]])
     ]
-    got = {}
+    assert n_near > _BRUTE_CUTOVER + 1
+    out = str(tmp_path / "knn_out")
     fb = knn_foreach_batch(resolved, level=12)
-    fb.sink = lambda df, bid: got.setdefault(bid, df.collect())
+    fb.sink = exactly_once_parquet_sink(out)
     metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     for bid, rows in enumerate(batches):
         path = str(tmp_path / f"batch{bid}")
@@ -140,4 +149,7 @@ def test_knn_stream_batch_with_new_escapees_compiles_nothing(spark, tmp_path):
         compiled = metric.getCount()
         fb(spark.read.parquet(path), bid)
     assert metric.getCount() == compiled
-    assert [len(got[b]) for b in range(3)] == [51, 51, 51]
+    written = spark.read.parquet(out).groupBy("batch_id").count().collect()
+    assert sorted(map(tuple, written)) == [
+        (0, n_near + 1), (1, n_near + 2), (2, n_near + 1)
+    ]

@@ -8,6 +8,8 @@ from __future__ import annotations
 import os
 import time
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from wayproblems_spark.fixtures.pages import generate_corpus, pages_df
@@ -71,7 +73,7 @@ def test_pip_stream_matches_batch(spark, tmp_path):
     assert sorted(got) == expected
 
 
-def test_pip_stream_replay_idempotent_and_cache_flat(spark, tmp_path):
+def test_pip_stream_replay_idempotent_and_cache_flat(spark, tmp_path, persisted_ids):
     pts, polys = _frames(spark, seed=22, n_pages=120)
     out = str(tmp_path / "pip_out")
     fb = pip_foreach_batch(spark, polys, level=10)
@@ -79,21 +81,52 @@ def test_pip_stream_replay_idempotent_and_cache_flat(spark, tmp_path):
     try:
         batch = pts.limit(300)
         fb(batch, 3)
-        jsc = spark.sparkContext._jsc.sc()
-        cached_after_first = jsc.getPersistentRDDs().size()
+        cached_after_first = persisted_ids()
         once = spark.read.parquet(out).drop("batch_id").collect()
         assert len(once) > 10
 
         # replay the SAME batch id (post-failure redelivery): written table
         # unchanged, cache flat (only the prebuilt index frames persist)
         fb(batch, 3)
-        assert jsc.getPersistentRDDs().size() == cached_after_first
+        assert persisted_ids() <= cached_after_first
         again = spark.read.parquet(out).drop("batch_id").collect()
         assert sorted(map(tuple, again)) == sorted(map(tuple, once))
 
         # a different batch appends its own partition; cache still flat
         fb(pts.limit(400), 4)
-        assert jsc.getPersistentRDDs().size() == cached_after_first
+        assert persisted_ids() <= cached_after_first
         assert spark.read.parquet(out).count() > len(once)
     finally:
         unpersist_pip_index(fb.prebuilt)
+
+
+def test_pip_stream_warm_batch_compiles_nothing(spark, tmp_path):
+    """A warm 2,000-point micro-batch read from parquet, through the
+    exactly-once sink, must reuse every generated class: neither the
+    batch's points nor its batch id may reach the generated code."""
+    pts, polys = _frames(spark, seed=21, n_pages=250)
+    bounds = pts.agg(*(f(c) for c in ("lat", "lon") for f in (F.min, F.max))).first()
+    rng = np.random.default_rng(5)
+    out = str(tmp_path / "pip_out")
+    fb = pip_foreach_batch(spark, polys, level=10)
+    fb.sink = exactly_once_parquet_sink(out)
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    n = 2000
+    try:
+        for bid in range(3):
+            path = str(tmp_path / f"batch{bid}")
+            spark.createDataFrame(pd.DataFrame({
+                "point_id": np.arange(n, dtype=np.int64) + bid * n,
+                "lat": rng.uniform(bounds[0], bounds[1], n),
+                "lon": rng.uniform(bounds[2], bounds[3], n),
+            })).coalesce(1).write.parquet(path)
+            # the first batches also warm the index's broadcasts: measure
+            # the third
+            compiled = metric.getCount()
+            fb(spark.read.parquet(path), bid)
+        assert metric.getCount() == compiled
+    finally:
+        unpersist_pip_index(fb.prebuilt)
+    written = spark.read.parquet(out)
+    assert written.select("batch_id").distinct().count() == 3
+    assert written.count() > 100

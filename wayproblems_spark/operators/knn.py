@@ -50,11 +50,11 @@ ring-wrap sliver and the tiny escapee ring expansion.
           they escalate regardless.
   escapees: after tier 1 and after each rung one step sizes what is
           left: it fetches at most _BRUTE_CUTOVER + 1 escapee ids off the
-          persisted frame (a bounded limit + collect_list, one small
-          job). At or below the cut-over those ids are the whole set and
-          go straight to the brute tail; nothing more is cached. Only a
-          larger slice is persisted and counted, and that count gates the
-          rungs' broadcast hints.
+          persisted frame (a top-k of the smallest ids + collect_list,
+          one small job). At or below the cut-over those ids are the
+          whole set and go straight to the brute tail; nothing more is
+          cached. Only a larger slice is persisted and counted, and that
+          count gates the rungs' broadcast hints.
   ladder: more than _BRUTE_CUTOVER escalated points are BROADCAST (when
           their count allows), ring-expanded at a coarser level (UDF wrap
           only on this small side), against the CACHED flat candidate
@@ -448,8 +448,11 @@ def _tiered_nearest(
         and count ``widen(left)``, the columns the rungs read; at or below
         it, cache nothing and return the points the ids select.
         -> (escapee frame, count)"""
+        # the orderBy makes the limit a top-k (TakeOrderedAndProject). A
+        # bare limit() plans generated code whose row counter Spark names
+        # from a global sequence, so every batch would compile two classes
         ids = (
-            left.select("point_id").limit(_BRUTE_CUTOVER + 1)
+            left.select("point_id").orderBy("point_id").limit(_BRUTE_CUTOVER + 1)
             .agg(F.collect_list("point_id")).collect()[0][0]
         )
         if len(ids) > _BRUTE_CUTOVER:

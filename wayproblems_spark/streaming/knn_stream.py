@@ -10,13 +10,16 @@ frame + per-cell index, cached sorted by cell) is built ONCE with
 ``build_knn_index`` and captured by the batch closure; every micro-batch
 then pays only for its own points (tier-1 sort-merge join that sorts only
 the batch's side, escalation only for its own escapees). A typical batch
-has a handful of escapees: their ids reach the brute tail as data, so a
-warm batch compiles no new generated class.
+has a handful of escapees: their ids reach the brute tail as data, the
+escapee step bounds its id fetch with a top-k, not a bare ``limit()``
+(whose generated code Spark names per plan), and
+:func:`exactly_once_parquet_sink` takes the batch id as a path, not a
+column. So a warm batch compiles no new generated class.
 
 Delivery semantics are foreachBatch's usual at-least-once at the
 boundary; :func:`exactly_once_parquet_sink` ships the idempotent
-per-batch-id dynamic-partition-overwrite pattern that upgrades a
-replayed batch to exactly-once in the written table.
+per-batch-id directory overwrite that upgrades a replayed batch to
+exactly-once in the written table.
 
 Scale: identical to the batch operator per micro-batch; the index is
 shared across all batches (persist single-node, ``materialize_dir=`` for
@@ -79,20 +82,19 @@ def knn_foreach_batch(
 
 def exactly_once_parquet_sink(out_dir: str) -> Callable:
     """Idempotent per-batch parquet sink for ``fb.sink``: each micro-batch
-    writes to a ``batch_id=<n>`` partition with dynamic partition
-    overwrite, so an at-least-once REPLAY of a batch (post-failure
-    recovery re-delivers the last uncommitted batch with the same
-    batch_id) overwrites its own partition instead of appending
-    duplicates — the written table is exactly-once."""
-    from pyspark.sql import functions as F
+    overwrites its own directory ``out_dir/batch_id=<n>``, so an
+    at-least-once REPLAY of a batch (post-failure recovery re-delivers
+    the last uncommitted batch with the same batch_id) replaces what that
+    batch wrote instead of appending duplicates — the written table is
+    exactly-once. A replay replaces the whole directory, also when the
+    replayed batch is empty. Reading ``out_dir`` discovers ``batch_id``
+    as a partition column.
+
+    The batch id reaches the write only as a path: a ``batch_id`` column
+    literal would be inlined into the generated code, and every warm
+    batch would compile new classes."""
 
     def sink(df: DataFrame, batch_id: int) -> None:
-        (
-            df.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={int(batch_id)}")
 
     return sink

@@ -10,10 +10,10 @@ every statistic zonal_stats emits is a fold of per-batch PARTIALS:
     v_avg     = total v_sum / total v_cnt   (v_cnt = Σ non-null counts)
 
 so each batch writes only its own partial frame (polygon-count-sized)
-to a `batch_id=<n>` partition with dynamic partition overwrite — the
-knn/pip stream exactly-once discipline: an at-least-once replay of a
-batch overwrites its own partition, and `zonal_totals` (the read view)
-folds whatever partitions exist. Totals over batches 0..n are therefore
+by overwriting its own `batch_id=<n>` directory — the knn/pip stream
+exactly-once discipline: an at-least-once replay of a batch replaces
+its own partition, and `zonal_totals` (the read view) folds whatever
+partitions exist. Totals over batches 0..n are therefore
 IDENTICAL to one-shot `zonal_stats` over the concatenated points
 (decimal partial sums are associative; min/max/count trivially so) —
 test-asserted, not approximate.
