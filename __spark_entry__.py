@@ -2314,10 +2314,10 @@ def q21_minhash_lsh_sql(spark, sf_dir):
     the last major dedup family member without a DuckDB-bit-exact check):
     deterministic token sets built from doc_id (the q19 pattern — DuckDB
     cannot replicate xxhash64, so the CONTENT is what both sides share)
-    are pushed through the PRODUCTION minhash path — word_shingles →
-    xxhash64 shingle hashing → `_minhash_band_buckets` exploded codegen
-    signature → band self-join → bucket cap → exact Jaccard verify — and
-    must reproduce the brute-force O(n²) Jaccard join exactly.
+    are pushed through the PRODUCTION minhash path — `_shingle_hash_rows`
+    codegen xxhash64 shingle rows → `_band_buckets` 64-min signature →
+    bucket cap → band self-join → exact Jaccard verify — and must
+    reproduce the brute-force O(n²) Jaccard join exactly.
 
     Construction: groups of 4 docs over group-unique token vocabularies —
     members 0/1 identical (J=1, banded with probability 1 by identity of

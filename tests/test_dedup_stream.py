@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 import time
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from wayproblems_spark.operators.dedup import minhash_lsh_pairs
@@ -74,6 +75,36 @@ def test_dedup_stream_matches_batch(spark, tmp_path):
     finally:
         q.stop()
 
+    assert sorted(got) == expected
+
+
+def test_dedup_stream_short_docs_match_batch(spark, tmp_path):
+    """Docs shorter than k words (two words, empty or blank text) have no
+    shingles, so they join no bucket; micro-batches holding them must
+    still emit exactly the batch operator's pairs over the whole corpus."""
+    docs = _corpus(spark).toPandas().sort_values("doc_id").reset_index(drop=True)
+    short = pd.DataFrame({
+        "doc_id": [200000, 200001, 200002, 200003, 200004, 200005],
+        "text": ["two words", "", "two words", "   ", "a b c d", ""],
+    })
+    expected = sorted(
+        (r["a"], r["b"], round(r["jaccard"], 9))
+        for r in minhash_lsh_pairs(
+            spark.createDataFrame(pd.concat([docs, short])), jaccard_threshold=0.5
+        ).collect()
+    )
+    assert len(expected) >= 50
+
+    got = []
+    fb = dedup_foreach_batch(str(tmp_path / "state"), jaccard_threshold=0.5)
+    fb.sink = lambda df, bid: got.extend(
+        (r["a"], r["b"], round(r["jaccard"], 9)) for r in df.collect()
+    )
+    k = len(docs) // 3
+    for bid in range(3):
+        chunk = pd.concat([docs.iloc[bid * k : (bid + 1) * k if bid < 2 else None],
+                           short.iloc[2 * bid : 2 * bid + 2]])
+        fb(spark.createDataFrame(chunk), bid)
     assert sorted(got) == expected
 
 

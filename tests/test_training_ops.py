@@ -74,6 +74,27 @@ def test_minhash_lsh_finds_near_dups(spark):
         assert abs(j - exp) < 1e-9
 
 
+def test_ngram_jaccard_short_docs(spark):
+    """Texts with fewer than k words have no k-grams: Jaccard 0 against a
+    longer text, null between two such texts (not a ``slice`` start-0
+    error, nor a division by zero)."""
+    df = spark.createDataFrame(
+        [
+            (1, "alpha beta"),
+            (2, ""),
+            (3, "one two three four five"),
+            (4, "one two three four six"),
+        ],
+        "doc_id long, text string",
+    )
+    cand = spark.createDataFrame([(1, 3), (2, 3), (1, 2), (3, 4)], "a long, b long")
+    got = {
+        (r["a"], r["b"]): r["jaccard"]
+        for r in ngram_jaccard_pairs(df, cand, k=3).collect()
+    }
+    assert got == {(1, 3): 0.0, (2, 3): 0.0, (1, 2): None, (3, 4): 0.5}
+
+
 def test_simhash_near_pairs(spark):
     base = _docs(spark).limit(30)
     clone = base.withColumn("doc_id", F.col("doc_id") + 100000)  # identical text

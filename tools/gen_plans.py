@@ -40,12 +40,10 @@ frames = {
     "q33 quantize_int8 (JVM array exprs)": E.q33_quantize_int8_sql(spark, SF),
 }
 # minhash band buckets (the dedup hot path)
-from wayproblems_spark.operators.dedup import _minhash_band_buckets, word_shingles
-d = t("documents")
-base = d.select(F.col("doc_id").alias("_id"),
-                F.array_distinct(F.transform(word_shingles(F.col("text"), 5), lambda s: F.xxhash64(s))).alias("shl")
-       ).filter(F.size("shl") > 0)
-frames["minhash band buckets (explode -> 64-col map-side-partial min)"] = _minhash_band_buckets(base, 64, 16)
+from wayproblems_spark.operators.dedup import _band_buckets, _shingle_hash_rows
+frames["minhash band buckets (shingle rows -> 64-col map-side-partial min)"] = _band_buckets(
+    _shingle_hash_rows(t("documents"), "doc_id", "text", 5), 64, 16
+)
 # round-6 text-pipeline operators
 frames["q42 chunk_documents (sequence+slice, zero shuffle)"] = E.q42_chunking_sql(spark, SF)
 frames["q43 pack_sequences (sharded window cumsum + budget split)"] = E.q43_packing_sql(spark, SF)

@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.window import Window
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -42,10 +43,14 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
 
 def word_shingles(text_col, k: int = 5):
-    """Distinct k-word shingles, computed with array expressions."""
+    """Distinct k-word shingles, computed with array expressions; empty
+    for a text with fewer than k words (``sequence(1, 0)`` counts down to
+    ``[1, 0]``, and ``slice`` rejects start 0)."""
     toks = F.split(F.lower(F.trim(text_col)), r"\s+")
     n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(0)))
+    idx = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
+        F.array().cast("array<int>")
+    )
     return F.array_distinct(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
     )
@@ -115,27 +120,63 @@ def _band_agg_columns(num_hashes: int, bands: int) -> list:
     return _BAND_AGG_CACHE[key]
 
 
-def _minhash_band_buckets(base: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(_id, band, sig) band-bucket keys via an EXPLODED codegen pipeline.
+def _band_buckets(rows: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(_id, hs) shingle-hash rows → (_id, band, sig) band-bucket keys.
 
-    The array-expression form evaluates 64 interpreted passes over every
-    shingle array; here the (doc, shingle-hash) rows explode once per seed
-    and flow through whole-stage codegen into a map-side-partial min —
-    the per-partition combine collapses the 64× explosion back to
-    docs×num_hashes rows before the (tiny) shuffle. Band signature =
-    xxhash64 over the seed-ordered mins (equality iff the min tuple
-    matches; the scheme hashes seeded re-hashes of the per-shingle
-    xxhash64, an equally valid minhash family)."""
-    ex = base.select("_id", F.explode("shl").alias("hs"))
-    # ONE groupBy with num_hashes min-agg buffers: same total hash count
-    # as the former seed-explode (each shingle row evaluates all seeds),
-    # but the 64× row materialization, its shuffle and the later
-    # collect_list band agg all disappear — rows stay docs×shingles
-    # through a single map-side-partial hash aggregate.
-    sigs = ex.groupBy("_id").agg(*_band_agg_columns(num_hashes, bands))
+    ONE groupBy with num_hashes min-agg buffers in whole-stage codegen,
+    map-side partial, rows staying docs×shingles (no 64× seed explode, no
+    collect_list band agg). Band signature = xxhash64 over the band's
+    seed-ordered mins (equality iff the min tuple matches; the scheme
+    hashes seeded re-hashes of the per-shingle xxhash64, an equally valid
+    minhash family). The min is duplicate-insensitive, so repeated
+    shingles in ``rows`` do not change a signature."""
+    sigs = rows.groupBy("_id").agg(*_band_agg_columns(num_hashes, bands))
     stack = ", ".join(f"{b}, s{b}" for b in range(bands))
     return sigs.select(
         "_id", F.expr(f"stack({bands}, {stack}) as (band, sig)")
+    )
+
+
+def _cap_buckets(buckets: DataFrame, max_bucket: int) -> tuple:
+    """(ranked, kept) for a (band, sig, _id) frame: ``ranked`` adds the
+    sort-based within-bucket ``rn`` (deterministic on id, streaming — no
+    whole-bucket buffer), ``kept`` is (band, sig, _id) of the first
+    ``max_bucket`` members of each bucket."""
+    w = Window.partitionBy("band", "sig").orderBy("_id")
+    ranked = buckets.withColumn("rn", F.row_number().over(w))
+    kept = ranked.filter(F.col("rn") <= max_bucket).select("band", "sig", "_id")
+    return ranked, kept
+
+
+def _bucket_pairs(kept: DataFrame) -> DataFrame:
+    """(a, b) with a < b for every two members of one (band, sig) bucket:
+    a codegen self-equi-join on the bucket key (both sides are the same
+    capped frame, so its exchange is reused). A pair sharing several
+    bands appears once per band."""
+    return (
+        kept.withColumnRenamed("_id", "a")
+        .join(kept.withColumnRenamed("_id", "b"), ["band", "sig"])
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b")
+    )
+
+
+def _verify_pairs(
+    cand: DataFrame, sets: DataFrame, jaccard_threshold: float
+) -> DataFrame:
+    """Exact Jaccard over the hashed shingle sets ``sets`` (_id, shl) for
+    the candidate pairs ``cand`` (a, b): the sets join back only for the
+    candidates (pairs ≪ docs, so the join is selective)."""
+    j = (
+        cand.join(sets.select(F.col("_id").alias("a"), F.col("shl").alias("sha")), "a")
+        .join(sets.select(F.col("_id").alias("b"), F.col("shl").alias("shb")), "b")
+    )
+    inter = F.size(F.array_intersect("sha", "shb")).cast("double")
+    union = F.size(F.array_union("sha", "shb")).cast("double")
+    return (
+        j.withColumn("jaccard", inter / union)
+        .filter(F.col("jaccard") >= jaccard_threshold)
+        .select("a", "b", "jaccard")
     )
 
 
@@ -154,18 +195,19 @@ def minhash_lsh(
     Jaccard verify. Returns ``{"pairs": DataFrame(a, b, jaccard),
     "dropped": DataFrame(band, sig, bucket_n, dropped)}``.
 
-    The shingle-hash frame is persisted internally: it feeds the band
-    buckets AND both sides of the verify join, and its interpreted
-    higher-order shingle transform is the operator's dominant cost — one
-    materialization instead of three. ``track_persists`` (the knn
-    pattern): pass a list to receive the persisted frame so long-running
-    repeated callers can unpersist it after consuming the result.
-    Callers that skip it accept one cached frame per call for the session
-    (fine for one-shot jobs; Spark's CacheManager holds a strong
-    reference, so a repeated caller MUST pass it — and note the
-    CacheManager serves identical logical plans from cache, so two calls
-    over a re-written parquet path would silently reuse the first call's
-    shingles unless the first frame was unpersisted).
+    The shingle-hash rows (``_shingle_hash_rows``, one codegen row per
+    shingle occurrence) are persisted internally: they feed both the
+    signature aggregate and the per-doc set aggregate of the verify, so
+    the input is scanned and tokenized once, not twice.
+    ``track_persists`` (the knn pattern): pass a list to receive the
+    persisted frame so long-running repeated callers can unpersist it
+    after consuming the result. Callers that skip it accept one cached
+    frame per call for the session (fine for one-shot jobs; Spark's
+    CacheManager holds a strong reference, so a repeated caller MUST pass
+    it — and note the CacheManager serves identical logical plans from
+    cache, so two calls over a re-written parquet path would silently
+    reuse the first call's shingles unless the first frame was
+    unpersisted).
 
     Scale shape (the round-1 design shuffled full shingle arrays through
     all bands and collect_list'd whole buckets before capping — an OOM
@@ -179,34 +221,24 @@ def minhash_lsh(
       no silent cap;
     * shingles are joined back only for the surviving candidate pairs
       (pairs ≪ docs, so the verify join is selective).
-    """
-    from pyspark.sql.window import Window
 
+    ``streaming.dedup_stream`` runs the same stages per micro-batch.
+    """
     # per-shingle hashes once (longs from here on: light to shuffle, cheap
     # to intersect; collision probability over 64-bit hashes is negligible
-    # and documented). Round 7: shingle hashing is a codegen ROW pipeline
-    # (_shingle_hash_rows, persisted — it feeds the signature aggregate
-    # AND the verify-side set aggregate) replacing the interpreted
-    # per-doc array construction that alone measured as half the bench
-    # leg. The two consumers stay SEPARATE aggregates deliberately:
-    # fusing collect_set into the signature aggregate demotes the whole
-    # thing from a codegen HashAggregate to an interpreted
-    # ObjectHashAggregate (collect_set is a TypedImperativeAggregate) —
-    # measured slower than the old array path; split, the 64-min/band
-    # aggregate keeps whole-stage codegen and only the small set
-    # aggregate pays the object path.
+    # and documented). The two consumers of the rows stay SEPARATE
+    # aggregates deliberately: fusing collect_set into the signature
+    # aggregate demotes the whole thing from a codegen HashAggregate to an
+    # interpreted ObjectHashAggregate (collect_set is a
+    # TypedImperativeAggregate) — measured slower; split, the 64-min/band
+    # aggregate keeps whole-stage codegen and only the small set aggregate
+    # pays the object path.
     rows = _shingle_hash_rows(df, id_col, text_col, k)
     rows = rows.persist()
     if track_persists is not None:
         track_persists.append(rows)
-    sigs = rows.groupBy("_id").agg(*_band_agg_columns(num_hashes, bands))
-    base = rows.groupBy("_id").agg(F.collect_set("hs").alias("shl"))
-    stack = ", ".join(f"{b}, s{b}" for b in range(bands))
-    buckets = sigs.select(
-        "_id", F.expr(f"stack({bands}, {stack}) as (band, sig)")
-    )
-    w = Window.partitionBy("band", "sig").orderBy("_id")
-    ranked = buckets.withColumn("rn", F.row_number().over(w))
+    sets = rows.groupBy("_id").agg(F.collect_set("hs").alias("shl"))
+    ranked, kept = _cap_buckets(_band_buckets(rows, num_hashes, bands), max_bucket)
 
     dropped = (
         ranked.groupBy("band", "sig")
@@ -216,32 +248,9 @@ def minhash_lsh(
         )
         .filter(F.col("dropped") > 0)
     )
-
-    # pairs within bucket (a < b) as a codegen self-equi-join on the
-    # bucket key — the nested transform/sequence array expansion this
-    # replaces is interpreted (the repo PERF LAW) and cost the r2 leg
-    # ~2s; both join sides are the same capped frame, so the window's
-    # (band, sig) exchange is reused. Cross-band dups drop on (a, b).
-    kept = ranked.filter(F.col("rn") <= max_bucket).select("band", "sig", "_id")
-    cand = (
-        kept.withColumnRenamed("_id", "a")
-        .join(kept.withColumnRenamed("_id", "b"), ["band", "sig"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-    )
-
-    j = (
-        cand.join(base.select(F.col("_id").alias("a"), F.col("shl").alias("sha")), "a")
-        .join(base.select(F.col("_id").alias("b"), F.col("shl").alias("shb")), "b")
-    )
-    inter = F.size(F.array_intersect("sha", "shb")).cast("double")
-    union = F.size(F.array_union("sha", "shb")).cast("double")
-    pairs = (
-        j.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("a", "b", "jaccard")
-    )
+    # cross-band duplicates of a pair drop on (a, b)
+    cand = _bucket_pairs(kept).dropDuplicates(["a", "b"])
+    pairs = _verify_pairs(cand, sets, jaccard_threshold)
     return {"pairs": pairs, "dropped": dropped}
 
 
@@ -270,7 +279,8 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     k: int = 3,
 ) -> DataFrame:
-    """Exact n-gram Jaccard for given (a, b) candidate pairs."""
+    """Exact n-gram Jaccard for given (a, b) candidate pairs; null for a
+    pair of texts that both have fewer than k words (no n-grams)."""
     sh = df.select(
         F.col(id_col).alias("_id"), word_shingles(F.col(text_col), k).alias("sh")
     )
@@ -280,7 +290,7 @@ def ngram_jaccard_pairs(
     )
     inter = F.size(F.array_intersect("sha", "shb")).cast("double")
     union = F.size(F.array_union("sha", "shb")).cast("double")
-    return j.select("a", "b", (inter / union).alias("jaccard"))
+    return j.select("a", "b", F.try_divide(inter, union).alias("jaccard"))
 
 
 _udf_cache: dict = {}
@@ -442,7 +452,6 @@ def _banded_pairs(s: DataFrame, chunks, max_hamming: int, max_bucket: int) -> di
     hamming verify. ``candidates`` in the returned dict is the
     pre-hamming-filter pair frame (lazy — only pay for it if counted),
     for measuring a scheme's candidate volume."""
-    from pyspark.sql.window import Window
     b = s.select("_id", "simhash", F.explode(chunks).alias("c")).select(
         "_id", "simhash", F.col("c.chunk").alias("chunk"), F.col("c.val").alias("val")
     )

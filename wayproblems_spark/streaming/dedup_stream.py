@@ -15,27 +15,33 @@ or driver memory:
   {state_dir}/docs     (batch_id, _id, shl)        hashed shingle sets
   {state_dir}/buckets  (batch_id, band, sig, _id)  LSH band-bucket keys
 
-Each batch pays: signature compute for ITS OWN docs only (the exploded
-codegen minhash pipeline from operators.dedup), one bucket-key semi-join
-against the state buckets (selective: only buckets the batch touches are
-read back — parquet pushdown on the band/sig equi-join keys), the exact
-Jaccard verify on surviving candidate pairs, and one partitioned append.
-State size on disk is O(corpus), but per-batch compute is O(batch +
-matching buckets) — the build-once/stream-many cost shape shared with
-knn_stream / pip_stream, except here the "index" legitimately GROWS, so
-it lives in storage instead of a persisted broadcast. PATH CONTRACT:
-``state_dir`` must be a POSIX path (local disk, NFS, or a fuse mount of
-an object store) — the existence probe (`_read_state`) and
-``compact_dedup_state`` manage files with os.path/shutil, which silently
-treat an s3a://-style URI as empty; routing them through the Hadoop
-FileSystem API is the known follow-up if raw object-store state is
-needed.
+Each batch runs the batch operator's own stages (operators.dedup
+``minhash_lsh``) over ITS OWN docs only: codegen shingle-hash rows, the
+per-doc ``collect_set`` of hashes (persisted; its explode feeds the
+signature aggregate), band buckets, the row_number bucket cap, and the
+exact-Jaccard verify on surviving candidate pairs; plus one bucket-key
+semi-join against the state buckets (selective: only buckets the batch
+touches are read back — parquet pushdown on the band/sig equi-join
+keys), and one write per state table. State size on disk is O(corpus),
+but per-batch compute is O(batch + matching buckets) — the
+build-once/stream-many cost shape shared with knn_stream / pip_stream,
+except here the "index" legitimately GROWS, so it lives in storage
+instead of a persisted broadcast. PATH CONTRACT: ``state_dir`` must be a
+POSIX path (local disk, NFS, or a fuse mount of an object store) — the
+existence probe (`_read_state`) and ``compact_dedup_state`` manage files
+with os.path/shutil, which silently treat an s3a://-style URI as empty;
+routing them through the Hadoop FileSystem API is the known follow-up if
+raw object-store state is needed.
 
-Delivery: every state write and the result sink are per-batch_id
-dynamic-partition overwrites, and state probes exclude the current
-batch_id — a replayed (at-least-once) micro-batch overwrites its own
-partitions and re-emits identical pairs, so the written tables are
-exactly-once (same pattern as knn_stream.exactly_once_parquet_sink).
+Delivery: each batch writes its state rows into its own directories,
+``docs/batch_id=<n>`` and ``buckets/batch_id=<n>/pbucket=*``, with a
+whole-directory overwrite, and state probes exclude the current
+batch_id — a replayed (at-least-once) micro-batch replaces what it wrote
+and re-emits identical pairs, so the written tables are exactly-once.
+Pair it with ``knn_stream.exactly_once_parquet_sink`` for the same
+property in the result table. The batch id reaches every write as a
+path, never as a column literal, so it never makes a batch's generated
+code new.
 
 Equivalence contract (test-asserted): every near-dup pair is emitted
 exactly once, in the batch where its LATER member arrives. Hence the
@@ -53,19 +59,14 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import _minhash_band_buckets, word_shingles
+from ..operators.dedup import (
+    _band_buckets,
+    _bucket_pairs,
+    _cap_buckets,
+    _shingle_hash_rows,
+    _verify_pairs,
+)
 from ..session import local_frame
-
-
-def _hashed_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(_id, shl array<long>) — the batch operator's base frame (dedup.py
-    minhash_lsh): distinct k-word shingles hashed to longs once."""
-    return df.select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(
-            F.transform(word_shingles(F.col(text_col), k), lambda s: F.xxhash64(s))
-        ).alias("shl"),
-    ).filter(F.size("shl") > 0)
 
 
 def _read_state(spark, path: str, like: DataFrame) -> DataFrame:
@@ -116,10 +117,9 @@ def dedup_foreach_batch(
         fb.sink = exactly_once_parquet_sink("/data/near_dup_pairs")
         docs.writeStream.foreachBatch(fb).start()
     """
-    from pyspark.sql.window import Window
-
     docs_dir = os.path.join(state_dir, "docs")
     buckets_dir = os.path.join(state_dir, "buckets")
+    pb = F.pmod(F.xxhash64("band", "sig"), F.lit(n_state_buckets))
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -132,23 +132,17 @@ def dedup_foreach_batch(
             return df
 
         try:
-            base = _persist(_hashed_shingles(batch_df, id_col, text_col, k))
-            buckets = _minhash_band_buckets(base, num_hashes, bands)
-            w = Window.partitionBy("band", "sig").orderBy("_id")
-            kept = _persist(
-                buckets.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= max_bucket)
-                .select("band", "sig", "_id")
+            # the batch's per-doc hashed shingle sets: the verify's new
+            # side, and (exploded; the min is duplicate-insensitive) the
+            # signature input — one scan of the batch
+            sets = _persist(
+                _shingle_hash_rows(batch_df, id_col, text_col, k)
+                .groupBy("_id")
+                .agg(F.collect_set("hs").alias("shl"))
             )
-
-            # within-batch candidates: the batch operator's capped
-            # self-equi-join (a < b)
-            within = (
-                kept.withColumnRenamed("_id", "a")
-                .join(kept.withColumnRenamed("_id", "b"), ["band", "sig"])
-                .filter(F.col("a") < F.col("b"))
-                .select("a", "b")
-            )
+            rows = sets.select("_id", F.explode("shl").alias("hs"))
+            _, kept = _cap_buckets(_band_buckets(rows, num_hashes, bands), max_bucket)
+            kept = _persist(kept)
 
             # cross candidates: batch bucket keys probe the state buckets.
             # Replay safety: a redelivered batch's own rows are already in
@@ -159,8 +153,8 @@ def dedup_foreach_batch(
             # on the batch's band/sig keys narrows within them; per-bucket
             # cap on the state side is ranked over the PROBED buckets
             # only, so the window never touches buckets the batch
-            # doesn't hit.
-            pb = F.pmod(F.xxhash64("band", "sig"), F.lit(n_state_buckets))
+            # doesn't hit. Both literals filter partition columns, so
+            # they prune the listing and never reach generated code.
             pbs = [
                 r[0]
                 for r in kept.select(pb.alias("pbucket")).distinct().collect()
@@ -175,65 +169,33 @@ def dedup_foreach_batch(
             probed = seen_b.join(
                 kept.select("band", "sig").distinct(), ["band", "sig"]
             )
-            seen_kept = (
-                probed.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= max_bucket)
-                .select("band", "sig", F.col("_id").alias("old"))
-            )
+            _, seen_kept = _cap_buckets(probed, max_bucket)
             cross = (
-                seen_kept.join(kept.withColumnRenamed("_id", "new"), ["band", "sig"])
+                seen_kept.withColumnRenamed("_id", "old")
+                .join(kept.withColumnRenamed("_id", "new"), ["band", "sig"])
                 .filter(F.col("old") != F.col("new"))
                 .select(
                     F.least("old", "new").alias("a"),
                     F.greatest("old", "new").alias("b"),
                 )
             )
+            cand = _bucket_pairs(kept).unionByName(cross).dropDuplicates(["a", "b"])
 
-            cand = within.unionByName(cross).dropDuplicates(["a", "b"])
-
-            # exact-Jaccard verify over hashed shingle sets; the old side
-            # joins back from state ONLY for candidate ids (selective)
-            seen_docs = _read_state(spark, docs_dir, base).filter(
+            # the old side's sets join back from state ONLY for candidate
+            # ids (selective)
+            seen_docs = _read_state(spark, docs_dir, sets).filter(
                 F.col("batch_id") != bid
             )
-            shl_all = base.unionByName(seen_docs.select("_id", "shl"))
-            j = (
-                cand.join(
-                    shl_all.select(F.col("_id").alias("a"), F.col("shl").alias("sha")),
-                    "a",
-                )
-                .join(
-                    shl_all.select(F.col("_id").alias("b"), F.col("shl").alias("shb")),
-                    "b",
-                )
-            )
-            inter = F.size(F.array_intersect("sha", "shb")).cast("double")
-            union = F.size(F.array_union("sha", "shb")).cast("double")
-            pairs = (
-                j.withColumn("jaccard", inter / union)
-                .filter(F.col("jaccard") >= jaccard_threshold)
-                .select("a", "b", "jaccard")
-            )
-            fb.sink(pairs, bid)
+            sets_all = sets.unionByName(seen_docs.select("_id", "shl"))
+            fb.sink(_verify_pairs(cand, sets_all, jaccard_threshold), bid)
 
-            # fold the batch into state — per-batch_id dynamic overwrite:
-            # a replayed batch rewrites its own partitions (exactly-once);
-            # the buckets table also partitions by pbucket (probe pruning)
-            for frame, path, parts in (
-                (base, docs_dir, ("batch_id",)),
-                (
-                    kept.select("band", "sig", "_id").withColumn("pbucket", pb),
-                    buckets_dir,
-                    ("batch_id", "pbucket"),
-                ),
-            ):
-                (
-                    frame.withColumn("batch_id", F.lit(bid))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(*parts)
-                    .parquet(path)
-                )
+            # fold the batch into state: its own directories, overwritten
+            # whole (a replay replaces them); buckets also partition by
+            # pbucket (probe pruning)
+            sets.write.mode("overwrite").parquet(f"{docs_dir}/batch_id={bid}")
+            kept.withColumn("pbucket", pb).write.mode("overwrite").partitionBy(
+                "pbucket"
+            ).parquet(f"{buckets_dir}/batch_id={bid}")
         finally:
             for df in batch_persists:
                 df.unpersist()
